@@ -229,6 +229,11 @@ def run_command(args: argparse.Namespace, spark) -> Any:
                 else PropertyGraph(nodes, edges)
             )
         g.write_parquet(f"{args.out}/nodes", f"{args.out}/edges")
+        from codegraph_spark import serving
+
+        # `--graph D` serves from (D, "cli_graph_*") entries, which
+        # write_parquet's invalidation of D/nodes and D/edges misses
+        serving.invalidate(args.out)
         out = {
             "nodes": g.nodes.count(),
             "edges": g.edges.count(),

@@ -11,7 +11,8 @@ This module reproduces that surface verbatim over :class:`MCPService`:
 without processes), ``serve`` is the stdin/stdout loop, wired to the
 CLI as ``python -m codegraph_spark --graph DIR serve mcp``. In the
 deployment model the driver keeps the graph DataFrames cached and each
-tool call is 1-3 DataFrame actions (SURVEY §3.3).
+tool call is a few Spark jobs (SURVEY §3.3; about 3 per op on average
+in a traced run of the ``code_serving`` benchmark workload).
 """
 
 from __future__ import annotations

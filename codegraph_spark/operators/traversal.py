@@ -13,21 +13,22 @@ use that. For path-returning queries (data-flow trace) we enumerate
 node-simple paths with an ``array_contains`` cycle guard, as the
 reference's 15-hop bound keeps the explosion finite.
 
-Scale design:
-- each round is ONE equi-join on the edge key — shuffle partitioned by
-  ``src``; pre-partition ``edges`` once (``repartition(src)``) and every
-  round reuses that layout;
-- ``localCheckpoint(eager=False)`` after each round truncates the
-  lineage/plan (otherwise round k replays rounds 1..k-1 and the plan
-  grows quadratically) WITHOUT forcing a per-round job — bounded
-  traversals run all rounds under the caller's single action. On a
-  multi-node cluster prefer ``spark.sparkContext.setCheckpointDir`` +
-  ``.checkpoint()`` for fault-tolerant truncation (and reintroduce a
-  per-round count if unbounded-depth early exit matters more than the
-  barrier cost — Pregel's trade, measured the other way here).
+Scale design: seeds anchor every traversal here, so the frontier is
+small and each round broadcasts it into ONE equi-join against the edge
+table, which is scanned in place, never shuffled.
+- :func:`bfs_reachable` keeps its frontier and visited set on the
+  driver and halts at the first empty frontier;
+- :func:`bfs_multi_source` and :func:`enumerate_paths` chain their
+  rounds through lazy ``localCheckpoint(eager=False)`` (without it
+  round k's plan replays rounds 1..k-1) and run under the caller's one
+  action. Every round then runs, and each costs its broadcast jobs even
+  once the frontier is empty; enumerate_paths counts every 5 rounds to
+  stop early.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -73,6 +74,15 @@ def _tiny_shuffle(df: DataFrame, enabled: bool = True):
         conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
+def _driver_frame(spark, rows: list[dict], ddl: str) -> DataFrame:
+    """*rows* as a one-partition frame of ``struct<ddl>`` columns, handed
+    to the JVM as ONE JSON literal: one py4j call whatever the row count
+    (``Column.isin`` or ``F.lit(list)`` make one per value)."""
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.from_json(F.lit(json.dumps(rows)), f"array<struct<{ddl}>>"))
+    )
+
+
 def bfs_reachable(
     edges: DataFrame,
     sources: DataFrame,
@@ -80,7 +90,6 @@ def bfs_reachable(
     edge_type: str | None = None,
     direction: str = "out",
     include_sources: bool = False,
-    broadcast_frontier: bool = True,
 ) -> DataFrame:
     """Distinct nodes reachable in 1..max_hops (min-hop annotated).
 
@@ -89,59 +98,38 @@ def bfs_reachable(
     building, query/advanced.go:242-290). Cycles are handled by the
     visited set.
 
-    Scale design: the reference's traversals are seed-anchored (one
-    symbol / one function), so frontier ≪ edges at any data scale —
-    ``broadcast_frontier`` (default) makes every round a map-side
-    broadcast-hash join: the edge table is scanned in place, never
-    shuffled, and the visited anti-join broadcasts the (small) union
-    of per-level frontiers. Pass ``False`` for whole-graph seeds.
-    ZERO driver actions inside the loop: rounds chain lazily through
-    flat localCheckpoints and the caller's one action runs them all
-    (see the in-loop comment for the measured rationale).
+    A superstep loop with the frontier and the visited set (``id → min
+    hops``) on the driver: one collect of the seeds, then per superstep
+    one collect of the edges leaving the broadcast frontier (two Spark
+    jobs: the broadcast and the scan; the edge table is scanned in place,
+    never shuffled). Reached ids already visited are dropped, and the
+    loop halts at the first empty frontier (Pregel's "no active vertex")
+    or at ``max_hops``, so a traversal that dies out after d hops costs
+    d + 1 supersteps, not ``max_hops``. Seed-anchored traversals keep
+    frontier ≪ edges, and a broadcast frontier is collected to the
+    driver anyway, so holding it there moves no extra data.
 
     :param sources: DataFrame with an ``id`` column of seed node ids.
-    :returns: DataFrame ``(id, hops)`` — ``hops`` = minimum hop count.
+    :returns: DataFrame ``(id, hops)`` — ``hops`` = minimum hop count,
+        built from the driver's visited set (no job until consumed).
     """
     e = _directed(edges, edge_type, direction)
-    frontier = sources.select("id").distinct().localCheckpoint(eager=True)
-    levels = [frontier.withColumn("hops", F.lit(0))]
-    seen = frontier  # lazy union of (flat, checkpointed) levels
-    with _tiny_shuffle(edges, enabled=broadcast_frontier):
-        # ZERO per-round driver actions: every round is a LAZY
-        # localCheckpoint — the returned frame is already backed by a
-        # (not-yet-computed) flat RDD scan, so round k's plan never
-        # re-expands rounds 1..k-1 (without the checkpoint, analysis of
-        # the growing `seen` union explodes combinatorially) — and the
-        # whole loop materializes under the caller's single action, each
-        # round's RDD caching inline as it first computes. Measured vs
-        # one-eager-barrier-per-round on the 10-hop impact BFS at sf0.1:
-        # ~25% faster — the per-round barrier jobs were the floor, not
-        # data volume. Rounds past frontier exhaustion are empty
-        # broadcast joins inside the same action (~free), which is why
-        # no early-exit count is worth its own job.
-        for hop in range(1, max_hops + 1):
-            f = F.broadcast(frontier) if broadcast_frontier else frontier
-            s = F.broadcast(seen) if broadcast_frontier else seen
-            nxt = (
-                f.join(e, f.id == e._from)
-                .select(F.col("_to").alias("id"))
-                .distinct()
-                .join(s, "id", "left_anti")
-                .localCheckpoint(eager=False)
-            )
-            levels.append(nxt.withColumn("hops", F.lit(hop)))
-            # re-checkpoint the growing visited set each round: without
-            # this, round k's anti-join broadcast re-scans k separate
-            # level RDDs (O(k²) scans across the loop); with it, one
-            # flat RDD per round (the union copy is |seen| rows — tiny
-            # for seed-anchored traversals).
-            seen = seen.unionByName(nxt).localCheckpoint(eager=False)
-            frontier = nxt
-    visited = levels[0]
-    for lv in levels[1:]:
-        visited = visited.unionByName(lv)
-    visited = visited.localCheckpoint(eager=False)
-    return visited if include_sources else visited.filter(F.col("hops") >= 1)
+    spark = edges.sparkSession
+    ddl = f"id {e.schema['_to'].dataType.simpleString()}"
+    visited = {r[0]: 0 for r in sources.select("id").collect()}
+    frontier = list(visited)
+    for hop in range(1, max_hops + 1):
+        if not frontier:
+            break
+        f = F.broadcast(_driver_frame(spark, [{"id": i} for i in frontier], ddl))
+        reached = f.join(e, f.id == e._from).select("_to").collect()
+        frontier = []
+        for (i,) in reached:
+            if i not in visited:
+                visited[i] = hop
+                frontier.append(i)
+    rows = [{"id": i, "hops": h} for i, h in visited.items() if include_sources or h]
+    return _driver_frame(spark, rows, f"{ddl}, hops int")
 
 
 def bfs_multi_source(
@@ -160,9 +148,10 @@ def bfs_multi_source(
     The sampled-centrality shape (Eppstein & Wang 2004): k per-seed
     BFS runs cost k × max_hops frontier rounds; tagging the frontier
     with its seed instead costs max_hops rounds TOTAL — the visited
-    set keys by (seed, id), everything else is the bfs_reachable
-    loop (lazy flat localCheckpoints, zero per-round driver actions,
-    broadcast frontier for seed-anchored workloads).
+    set keys by (seed, id). Rounds chain through lazy flat
+    localCheckpoints under the caller's action, with a broadcast
+    frontier for seed-anchored workloads; all ``max_hops`` rounds run,
+    each with its own broadcast jobs, even after the frontier empties.
 
     :param seeds: DataFrame with ``seed`` (tag) and ``id`` (start
         node) columns — pass ``seed = id`` for plain multi-source.
@@ -289,12 +278,11 @@ def enumerate_paths(
     cur = cur.localCheckpoint(eager=True)
     acc: DataFrame | None = None
     with _tiny_shuffle(edges):
-        # Same barrier-free shape as bfs_reachable (lazy checkpoints
-        # flatten each round's plan, no per-round action), except path
-        # enumeration bounds are deep (15) while real path depth is
-        # usually shallow, so one periodic count every `check_every`
-        # rounds reclaims the early exit at 1/check_every the barrier
-        # cost.
+        # Lazy checkpoints flatten each round's plan, with no per-round
+        # action; but path enumeration bounds are deep (15) while real
+        # path depth is usually shallow, so one periodic count every
+        # `check_every` rounds reclaims the early exit at 1/check_every
+        # the barrier cost.
         check_every = 5
         for hop in range(1, max_hops + 1):
             cur = (

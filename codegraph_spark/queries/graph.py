@@ -484,8 +484,8 @@ def graph_harmonic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (Eppstein & Wang 2004) estimates it from a source SAMPLE.
     Here: :data:`_HARMONIC_SEEDS` deterministic seeds (smallest member
     ids — the oracle can re-derive them), one min-hop BFS per seed
-    (operators/traversal.bfs_reachable — the broadcast-frontier,
-    zero-driver-actions-per-round loop j4 uses), contributions
+    (the min-hop semantics of operators/traversal.bfs_reachable, the
+    loop j4 uses), contributions
     ``1000 div d`` summed per node, top-20. All integer after the hop
     counts, so the oracle (recursive-CTE BFS per seed) matches
     bit-for-bit.

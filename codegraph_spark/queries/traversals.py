@@ -281,14 +281,12 @@ def warm_views(spark: SparkSession, sf_dir: str) -> None:
         trigram_fields=("name", "symbol"),
     )
     # the three query-layer views build SEQUENTIALLY, deliberately NOT
-    # on the warm_serving_caches thread pool: j4_impact_view's
-    # bfs_reachable scopes session-GLOBAL conf (_tiny_shuffle: one
-    # shuffle partition, AQE off) around its round loop, which would
-    # poison any plan another thread compiles in that window; and
-    # j6_deps_view's build memoizes through member_symbols_view, so the
-    # two would contest one cached_view key (the check-then-set race
-    # graph.py engineers around). The parallel win lives in the flat
-    # warm_serving_caches stage above; these three are one chain.
+    # on the warm_serving_caches thread pool: j6_deps_view's build
+    # memoizes through member_symbols_view, so the two would contest one
+    # cached_view key (the check-then-set race graph.py engineers
+    # around). j4_impact_view's BFS sets no session conf (its supersteps
+    # are driver-side collects), so it is not what keeps this stage
+    # sequential; the parallel win lives in the flat stage above.
     member_symbols_view(g).count()
     j6_deps_view(g).count()
     j4_impact_view(g).count()

@@ -14,10 +14,12 @@ Three layers, mirroring the reference:
   analyze_function (:246-523).
 
 Serving model (SURVEY §3.3): a long-lived driver keeps the graph
-DataFrames persisted; each call is 1-3 DataFrame actions, collected
-only at the response boundary. All heavy work (joins, traversals)
-stays on executors — the reference's per-call Bolt round-trips become
-Catalyst plans over cached tables.
+DataFrames persisted; each call is a few Spark jobs (a traced run of
+the ``code_serving`` benchmark workload in ``perfbench/`` averages
+about 3 per op, 6 for an impact analysis). Joins and scans stay on
+executors; traversals hold only their frontier and visited ids on the
+driver — the reference's per-call Bolt round-trips become Catalyst
+plans over cached tables.
 """
 
 from __future__ import annotations
@@ -165,7 +167,6 @@ class AdvancedService:
         seed_defs = (
             seeds.join(defs, seeds.id == defs.dst).select(F.col("src").alias("id"))
             .unionByName(seeds)  # symbol node may itself be the definition
-            .distinct()
         )
         affected = bfs_reachable(
             self.g.edges, seed_defs, max_hops=max_depth,

@@ -297,9 +297,14 @@ def index_records(files: DataFrame) -> DataFrame:
 
 
 def split_records(records: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split the record stream into (nodes, edges). Callers should
-    ``persist()`` *records* first if materializing both — otherwise the
-    parse runs twice (documented, parse is cheap & deterministic).
+    """Split the record stream into (nodes, edges).
+
+    Four branches read *records* (nodes, edges, call candidates and Go
+    targets), so a lazy ``localCheckpoint`` truncates it first: the
+    first action computes the parse once and every later read, in that
+    action or the next, scans the checkpointed blocks. Unlike
+    ``persist()`` it registers nothing with Spark's plan-matching cache,
+    so a later parse of the same root reads the files again.
 
     Cross-file call resolution: the Go kernel emits ``callcand``
     records for bare-name calls with no same-file definition (in Go a
@@ -307,6 +312,7 @@ def split_records(records: DataFrame) -> tuple[DataFrame, DataFrame]:
     here as ONE distributed equi-join on (package fqn, name) against
     the package-level Function nodes — per-file kernels stay pure, the
     cross-file state lives in the shuffle, exactly where it scales."""
+    records = records.localCheckpoint(eager=False)
     nodes = (
         records.filter(F.col("rec") == "node")
         .drop("rec", "dst", "order")
@@ -358,8 +364,7 @@ def index_project(
     (indexer.go:132) + walk → parse → split. Deterministic for a fixed
     tree (the reference stamps createdAt/updatedAt; we leave timestamps
     to the upsert layer, F21, so re-index is exactly idempotent)."""
-    records = index_records(walk_sources(spark, root)).persist()
-    nodes, edges = split_records(records)
+    nodes, edges = split_records(index_records(walk_sources(spark, root)))
 
     name = service_name or root.rstrip("/").rsplit("/", 1)[-1]
     sid = f"service:{name}"

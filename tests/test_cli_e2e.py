@@ -114,6 +114,25 @@ def test_cli_search_then_lsp_then_analyze_same_session(spark, cli_graphs):
     assert status["connected"] is True
 
 
+def test_cli_same_session_reindex_serves_new_symbol(spark, tmp_path):
+    """index → query → edit → re-index → query in one session: the
+    second query sees the new function. Two stale layers used to hide
+    it: the persisted parse of the first index (Spark's cache matches
+    the re-index's identical plan) and the `--graph` serving cache."""
+    tree = tmp_path / "tree"
+    tree.mkdir()
+    src = tree / "mod.py"
+    src.write_text("def fn_a(x):\n    return x\n")
+    out = str(tmp_path / "graph")
+
+    _run(spark, ["index", "project", str(tree), "--out", out])
+    assert _run(spark, ["--graph", out, "lsp", "completion", "fn_"]) == ["fn_a"]
+    with open(src, "a") as fh:
+        fh.write("\n\ndef fn_b(x):\n    return fn_a(x)\n")
+    _run(spark, ["index", "project", str(tree), "--out", out])
+    assert _run(spark, ["--graph", out, "lsp", "completion", "fn_"]) == ["fn_a", "fn_b"]
+
+
 def test_cli_export_webdataset(spark, tmp_path):
     import os
     import tarfile

@@ -85,6 +85,42 @@ def test_reindex_idempotent(spark, indexed):
     assert merged.exceptAll(nodes).isEmpty()
 
 
+def test_split_records_parses_once(spark, tmp_path):
+    """A nodes write plus an edges write run the Python parse once:
+    split_records reads its input four times (nodes, edges, call
+    candidates, Go targets), and an un-persisted input re-ran the
+    parse for each read."""
+    from codegraph_spark.sources.static_index import (
+        RECORD_SCHEMA,
+        parse_source_file,
+        split_records,
+    )
+
+    log = str(tmp_path / "parses")
+
+    def counted_parse(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            with open(log, "a") as fh:
+                fh.write("parse\n")
+            out = [r for p, c in zip(pdf["path"], pdf["content"])
+                   for r in parse_source_file(p, c)]
+            yield pd.DataFrame(out, columns=RECORD_SCHEMA.fieldNames())
+
+    files = spark.createDataFrame(
+        [("/src/m.py", "def a(x):\n    return b(x)\n\ndef b(x):\n    return x\n")],
+        "path string, content string",
+    ).coalesce(1)
+    nodes, edges = split_records(files.mapInPandas(counted_parse, RECORD_SCHEMA))
+    nodes.write.parquet(str(tmp_path / "nodes"))
+    edges.write.parquet(str(tmp_path / "edges"))
+    assert spark.read.parquet(str(tmp_path / "edges")).filter(
+        F.col("type") == "CALLS").count() == 1
+    with open(log) as fh:
+        assert fh.read().count("parse") == 1
+
+
 def test_parse_unit():
     """Pure-function unit check on a known source (signature, method
     vs function labels, parameter order, CALLS resolution)."""
