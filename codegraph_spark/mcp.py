@@ -11,8 +11,9 @@ This module reproduces that surface verbatim over :class:`MCPService`:
 without processes), ``serve`` is the stdin/stdout loop, wired to the
 CLI as ``python -m codegraph_spark --graph DIR serve mcp``. In the
 deployment model the driver keeps the graph DataFrames cached and each
-tool call is a few Spark jobs (SURVEY §3.3; about 3 per op on average
-in a traced run of the ``code_serving`` benchmark workload).
+tool call is a few Spark jobs (SURVEY §3.3; 2.0 per op on average in a
+traced run of the ``code_serving`` benchmark workload, and 3 for
+``codegraph_analyze_function``).
 """
 
 from __future__ import annotations

@@ -104,6 +104,8 @@ def salted_self_pairs(
     """
     from functools import reduce
 
+    if n_salt < 1:
+        raise ValueError(f"n_salt must be >= 1, got {n_salt}")
     freq = df.groupBy(*keys).agg(F.count("*").alias("_n"))
     hot_keys = F.broadcast(
         freq.filter(F.col("_n") > hot_threshold)

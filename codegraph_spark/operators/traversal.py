@@ -14,23 +14,25 @@ node-simple paths with an ``array_contains`` cycle guard, as the
 reference's 15-hop bound keeps the explosion finite.
 
 Scale design: seeds anchor every traversal here, so the frontier is
-small and each round broadcasts it into ONE equi-join against the edge
-table, which is scanned in place, never shuffled.
-- :func:`bfs_reachable` keeps its frontier and visited set on the
-  driver and halts at the first empty frontier;
-- :func:`bfs_multi_source` and :func:`enumerate_paths` chain their
-  rounds through lazy ``localCheckpoint(eager=False)`` (without it
-  round k's plan replays rounds 1..k-1) and run under the caller's one
-  action. Every round then runs, and each costs its broadcast jobs even
-  once the frontier is empty; enumerate_paths counts every 5 rounds to
-  stop early.
+small and the edge table is scanned in place, never shuffled.
+- :func:`bfs_visited` keeps its frontier and visited set on the driver,
+  runs each superstep as ONE job (the edge scan filtered by the frontier
+  ids, :func:`id_filter`) and halts at the first empty frontier; a
+  traced ``code_serving`` benchmark run averages 2.0 jobs per serving
+  op (``tests/test_serving_overhead.py`` pins per-call counts);
+- :func:`bfs_multi_source` and :func:`enumerate_paths` broadcast their
+  frontier into one equi-join per round, chained through lazy
+  ``localCheckpoint(eager=False)`` (without it round k's plan replays
+  rounds 1..k-1) under the caller's one action. Every round runs, even
+  once the frontier is empty; enumerate_paths counts every 5 rounds.
 """
 
 from __future__ import annotations
 
 import json
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -47,11 +49,8 @@ def _directed(edges: DataFrame, edge_type: str | None, direction: str) -> DataFr
     raise ValueError(f"direction must be out|in|both, got {direction!r}")
 
 
-from contextlib import contextmanager
-
-
 @contextmanager
-def _tiny_shuffle(df: DataFrame, enabled: bool = True):
+def _tiny_shuffle(df: DataFrame):
     """Scope per-round shuffles of a seed-anchored traversal to one
     partition, AQE off. Rationale: every round's shuffle moves only the
     frontier (≪ edges at any data scale — the edge side is broadcast-
@@ -59,9 +58,6 @@ def _tiny_shuffle(df: DataFrame, enabled: bool = True):
     task-launch overhead, and AQE adds a stage-materialization job per
     round. Only the eager per-round checkpoints execute under this
     scope; settings are restored before the caller's action runs."""
-    if not enabled:
-        yield
-        return
     conf = df.sparkSession.conf
     old_sp = conf.get("spark.sql.shuffle.partitions")
     old_aqe = conf.get("spark.sql.adaptive.enabled")
@@ -74,13 +70,44 @@ def _tiny_shuffle(df: DataFrame, enabled: bool = True):
         conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
-def _driver_frame(spark, rows: list[dict], ddl: str) -> DataFrame:
-    """*rows* as a one-partition frame of ``struct<ddl>`` columns, handed
-    to the JVM as ONE JSON literal: one py4j call whatever the row count
-    (``Column.isin`` or ``F.lit(list)`` make one per value)."""
-    return spark.range(1, numPartitions=1).select(
-        F.inline(F.from_json(F.lit(json.dumps(rows)), f"array<struct<{ddl}>>"))
-    )
+def id_filter(col: str, ids) -> Column:
+    """``col IN ids`` for a set of string or integer ids on the driver,
+    as ONE SQL expression: one py4j call whatever its size (``isin``
+    makes one per id). Above ten ids Spark's optimizer turns the list
+    into a hash-set test (``InSet``), not a per-row scan."""
+
+    def sql(v) -> str:
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        if isinstance(v, int) and not isinstance(v, bool):
+            return str(v)
+        raise TypeError(f"id of unsupported type {type(v).__name__}: {v!r}")
+
+    lits = ", ".join(map(sql, ids))
+    return F.expr(f"`{col}` IN ({lits})") if lits else F.lit(False)
+
+
+def bfs_visited(edges: DataFrame, seeds, max_hops: int,
+                edge_type: str | None = None, direction: str = "out") -> dict:
+    """The BFS superstep loop: ``{id: min hops}`` of every node within
+    ``max_hops`` of the seed ids (seeds at 0). Each superstep is ONE job
+    collecting the edges that leave the frontier; ids already visited
+    are dropped, and the loop halts at the first empty frontier
+    (Pregel's "no active vertex") or at ``max_hops``, so a traversal
+    that dies out after d hops costs d + 1 supersteps."""
+    e = _directed(edges, edge_type, direction)
+    visited = dict.fromkeys(seeds, 0)
+    frontier = list(visited)
+    for hop in range(1, max_hops + 1):
+        if not frontier:
+            break
+        reached = e.filter(id_filter("_from", frontier)).select("_to").collect()
+        frontier = []
+        for (i,) in reached:
+            if i not in visited:
+                visited[i] = hop
+                frontier.append(i)
+    return visited
 
 
 def bfs_reachable(
@@ -96,40 +123,16 @@ def bfs_reachable(
     Implements the endpoint semantics of Cypher ``(seed)-[:T*1..k]->(x)
     RETURN DISTINCT x`` (impact analysis, query.go:203-242; call-graph
     building, query/advanced.go:242-290). Cycles are handled by the
-    visited set.
-
-    A superstep loop with the frontier and the visited set (``id → min
-    hops``) on the driver: one collect of the seeds, then per superstep
-    one collect of the edges leaving the broadcast frontier (two Spark
-    jobs: the broadcast and the scan; the edge table is scanned in place,
-    never shuffled). Reached ids already visited are dropped, and the
-    loop halts at the first empty frontier (Pregel's "no active vertex")
-    or at ``max_hops``, so a traversal that dies out after d hops costs
-    d + 1 supersteps, not ``max_hops``. Seed-anchored traversals keep
-    frontier ≪ edges, and a broadcast frontier is collected to the
-    driver anyway, so holding it there moves no extra data.
-
-    :param sources: DataFrame with an ``id`` column of seed node ids.
-    :returns: DataFrame ``(id, hops)`` — ``hops`` = minimum hop count,
-        built from the driver's visited set (no job until consumed).
-    """
-    e = _directed(edges, edge_type, direction)
-    spark = edges.sparkSession
-    ddl = f"id {e.schema['_to'].dataType.simpleString()}"
-    visited = {r[0]: 0 for r in sources.select("id").collect()}
-    frontier = list(visited)
-    for hop in range(1, max_hops + 1):
-        if not frontier:
-            break
-        f = F.broadcast(_driver_frame(spark, [{"id": i} for i in frontier], ddl))
-        reached = f.join(e, f.id == e._from).select("_to").collect()
-        frontier = []
-        for (i,) in reached:
-            if i not in visited:
-                visited[i] = hop
-                frontier.append(i)
+    visited set. One job collects the seed ids; :func:`bfs_visited`'s
+    map comes back as ONE JSON literal ``(id, hops)`` frame: one py4j
+    call whatever its size, and no job until consumed."""
+    seeds = [r[0] for r in sources.select("id").collect()]
+    visited = bfs_visited(edges, seeds, max_hops, edge_type, direction)
     rows = [{"id": i, "hops": h} for i, h in visited.items() if include_sources or h]
-    return _driver_frame(spark, rows, f"{ddl}, hops int")
+    ddl = f"array<struct<id {edges.schema['dst'].dataType.simpleString()}, hops int>>"
+    return edges.sparkSession.range(1, numPartitions=1).select(
+        F.inline(F.from_json(F.lit(json.dumps(rows)), ddl))
+    )
 
 
 def bfs_multi_source(
@@ -138,7 +141,6 @@ def bfs_multi_source(
     max_hops: int,
     edge_type: str | None = None,
     direction: str = "out",
-    broadcast_frontier: bool = True,
 ) -> DataFrame:
     """Min-hop BFS from EVERY seed simultaneously: ``(seed, id, hops)``
     with ``hops`` = the minimum hop count from that seed, seeds
@@ -150,8 +152,8 @@ def bfs_multi_source(
     with its seed instead costs max_hops rounds TOTAL — the visited
     set keys by (seed, id). Rounds chain through lazy flat
     localCheckpoints under the caller's action, with a broadcast
-    frontier for seed-anchored workloads; all ``max_hops`` rounds run,
-    each with its own broadcast jobs, even after the frontier empties.
+    frontier; all ``max_hops`` rounds run, each with its own broadcast
+    jobs, even after the frontier empties.
 
     :param seeds: DataFrame with ``seed`` (tag) and ``id`` (start
         node) columns — pass ``seed = id`` for plain multi-source.
@@ -162,10 +164,9 @@ def bfs_multi_source(
     )
     levels = [frontier.withColumn("hops", F.lit(0))]
     seen = frontier
-    with _tiny_shuffle(edges, enabled=broadcast_frontier):
+    with _tiny_shuffle(edges):
         for hop in range(1, max_hops + 1):
-            f = F.broadcast(frontier) if broadcast_frontier else frontier
-            s = F.broadcast(seen) if broadcast_frontier else seen
+            f, s = F.broadcast(frontier), F.broadcast(seen)
             nxt = (
                 f.join(e, f.id == e._from)
                 .select("seed", F.col("_to").alias("id"))

@@ -64,87 +64,6 @@ def _tuned(fn: QueryFn) -> QueryFn:
 # the union of recorded rounds converges to the full registry. Every
 # query is ALSO verified against its DuckDB oracle on every pytest run
 # (tests/test_oracle_parity.py) regardless of window position.
-#: name -> round in which the query's SEMANTICS changed: treated as
-#: never-verified until a green row lands in that round or later (the
-#: demand self-expires once it does, so a stale entry here cannot pin
-#: a query to the front forever).
-_REVERIFY: dict[str, int] = {
-    "j9_orphan_parts": 4,  # round 4: restored reference-parity semantics
-    "sim_lsh_cosine": 6,   # round 6: banded OR-union, ceiling removed
-    "graph_kcore": 6,      # round 6: fixpoint peel (was fixed 8 rounds)
-    "text_cross_doc_coverage": 6,  # round 6: new (cross-doc span coverage)
-    "stream_interval_join": 6,     # round 6: new (stream-stream interval join)
-    "corpus_temperature_mix": 6,   # round 6: new (temperature-sampled mix)
-    "vocab_bpe_merges": 6,         # round 6: new (iterative BPE training)
-    "corpus_split_leakage": 6,     # round 6: new (cross-split leakage audit)
-    "emb_alignment_audit": 6,      # round 6: new (text-embedding alignment audit)
-    "text_gopher_quality": 6,      # round 6: new (Gopher rule-bundle filter)
-    "vocab_bpe_encode": 6,         # round 6: new (trained-merge BPE encoding)
-    "sim_ivf_pq": 6,               # round 6: new (IVF-PQ ADC search)
-    "corpus_dsir_sample": 6,       # round 6: new (DSIR importance resampling)
-    "emb_pca_power": 6,            # round 6: new (Gram power iteration)
-    "text_cdc_chunks": 6,          # round 6: new (content-defined chunk dedup)
-    "corpus_split_semantic_leakage": 6,  # round 6: new (embedding decontamination)
-    "graph_call_cycles": 6,        # round 6: new (directed cycle detection)
-    "sim_pq_recall": 6,            # round 6: new (ADC recall dashboard)
-    "mm_audio_fingerprint": 6,     # round 6: new (landmark audio near-dup)
-    "corpus_pack_tokens": 6,       # round 6: new (true-token shard packing)
-    "ev_cms_topk": 6,              # round 6: new (count-min heavy hitters)
-    "stream_cms_topk": 6,          # round 6: new (streaming CMS sketch)
-    "vocab_bpe_compression_curve": 6,  # round 6: new (merge convergence curve)
-    "ev_kmv_distinct": 6,          # round 6: new (KMV cardinality sketch)
-    "stream_kmv_distinct": 6,      # round 6: new (streaming KMV state op)
-    "ev_transition_matrix": 6,     # round 6: new (Markov event transitions)
-    "corpus_source_audit": 6,      # round 6: new (per-source curation audit)
-    "corpus_dedup_keep_best": 6,   # round 6: new (quality-aware keeper)
-    "graph_ppr": 6,                # round 6: new (personalized PageRank)
-    "sim_hard_negatives": 6,       # round 6: new (hard-negative mining)
-    "stream_transition_matrix": 6,  # round 6: new (stateful transition op #5)
-    "mm_phash": 6,                 # round 6: new (DCT perceptual hash)
-    "mm_audio_zcr": 6,             # round 6: new (zero-crossing rate)
-    "ev_cusum_drift": 6,           # round 6: new (CUSUM drift detection)
-    "ev_outliers_mad": 9,          # round 9: histogram-cumsum medians
-                                   # (lossless rewrite — same oracle)
-    "corpus_ccnet_buckets": 9,     # round 9: distributed per-lang rank
-                                   # (lossless rewrite — same oracle)
-    "stream_cusum_drift": 6,       # round 6: new (streaming CUSUM rollup)
-    "graph_scc": 6,                # round 6: new (FW-BW coloring SCC)
-    "text_tfidf_keywords": 6,      # round 6: new (TF-rarity keywords)
-    "stream_dedup_minhash": 6,     # round 6: new (intake LSH dedup, stateful op #6)
-    "dedup_semantic": 7,       # round 7: exact-group collapse (lossless rewrite)
-    "sim_ivf_assign": 7,       # round 7: new (vectorized assignment kernel gate)
-    "sim_ivf_sampled_purity": 7,  # round 7: new (sampled-trainer recovery gate)
-    "ev_quantiles_sketch": 7,       # round 7: new (exact histogram quantiles)
-    "stream_quantiles_sketch": 7,   # round 7: new (streaming histogram twin)
-    "mm_jpeg_roundtrip": 9,  # round 9: sort dropped (order-insensitive
-                             # compare; oracle unchanged)
-    "sim_ivf_two_level_gate": 8,  # round 8: new (escalated-kernel driver gate)
-    "stream_image_meta": 8,    # round 8: new (decode-at-the-ingest-door twin)
-    "mm_png_roundtrip": 9,     # round 9: sort dropped (order-insensitive
-                               # compare; oracle unchanged)
-    "text_contamination_bloom": 8,  # round 8: bitset routed through serving cache
-    "stream_transitions_ooo": 8,    # round 8: horizon violation now raises
-    "stream_dedup_minhash_ooo": 8,  # round 8: split cache content-fingerprinted
-    "mm_stored_media_meta": 9,  # round 9: new (stored-bytes media scan gate)
-    "mm_mjpeg_scene_cut": 9,   # round 9: per-doc watermark, memo removed
-                               # (same oracle — cut list provably unchanged)
-    "corpus_quality_calibration": 9,  # round 9: distributed exact ntile
-                                      # (lossless rewrite — same oracle)
-    "corpus_padding_waste": 9,  # round 9: distributed exact rank (lossless)
-    "dedup_ngram_jaccard": 9,  # round 9: xxhash64 hot ids + guarded broadcast
-    "dedup_containment": 9,    # round 9: xxhash64 hot ids + guarded broadcast
-    "dedup_edit_distance": 5,  # round 5: dual-offset blocking + PassJoin
-    "dedup_minhash_lsh": 5,    # round 5: exact-dedup-first rep stage
-    "ev_funnel": 5,            # round 5: NULLIF zero-user conversion
-    "corpus_filter_funnel": 5,  # round 5: NULLIF empty-corpus yield
-    "stream_funnel": 5,        # round 5: 0 counts on empty drain
-    "stream_transitions_ooo": 10,   # round 10: ooo fixture sliced by
-                                    # ts-range percentiles (was ntile)
-    "stream_dedup_minhash_ooo": 10,  # round 10: same fixture change
-    "corpus_token_budget_plan": 10,  # round 10: decimal(38)/hugeint
-                                     # product (same values at gate sf)
-    "ev_kmv_overlap": 10,      # round 10: seg aliases (oracle-identical)
-}
 
 
 def _last_green_rounds() -> dict[str, int]:
@@ -180,10 +99,7 @@ def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
     queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
     for modname in _MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except ModuleNotFoundError:
-            continue  # module not built yet
+        mod = importlib.import_module(modname)
         for k, v in getattr(mod, "QUERIES", {}).items():
             if k in queries:
                 raise ValueError(f"duplicate query name {k!r} in {modname}")
@@ -194,13 +110,6 @@ def collect() -> tuple[dict[str, QueryFn], dict[str, str]]:
         raise ValueError(f"oracles without queries: {missing}")
 
     last_green = _last_green_rounds()
-
-    def tier(k: str) -> int:
-        g = last_green.get(k, 0)
-        if g < _REVERIFY.get(k, 0):
-            return 0  # green predates the semantics change — re-check
-        return g
-
-    order = sorted(queries, key=lambda k: (tier(k), k))
+    order = sorted(queries, key=lambda k: (last_green.get(k, 0), k))
     queries = {k: queries[k] for k in order}
     return queries, {k: oracles[k] for k in order if k in oracles}

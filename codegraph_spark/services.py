@@ -15,11 +15,12 @@ Three layers, mirroring the reference:
 
 Serving model (SURVEY §3.3): a long-lived driver keeps the graph
 DataFrames persisted; each call is a few Spark jobs (a traced run of
-the ``code_serving`` benchmark workload in ``perfbench/`` averages
-about 3 per op, 6 for an impact analysis). Joins and scans stay on
-executors; traversals hold only their frontier and visited ids on the
-driver — the reference's per-call Bolt round-trips become Catalyst
-plans over cached tables.
+the ``code_serving`` benchmark workload in ``perfbench/`` averages 2.0
+per op, re-index writes included; ``analyze_function`` is 3, and a
+traversal is one per id lookup plus one per BFS superstep). Scans stay
+on executors; id sets the driver already holds go back as one literal
+filter, never a broadcast join — the reference's per-call Bolt
+round-trips become Catalyst plans over cached tables.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 
 from codegraph_spark.graph import PropertyGraph
 from codegraph_spark.operators.search import search_nodes
-from codegraph_spark.operators.traversal import bfs_reachable, enumerate_paths
+from codegraph_spark.operators.traversal import bfs_visited, enumerate_paths, id_filter
 
 _LOC_COLS = ("path", "start_line", "end_line")
 
@@ -49,6 +50,12 @@ def _location(row: dict) -> dict:
         "startLine": row.get("start_line"),
         "endLine": row.get("end_line"),
     }
+
+
+def _by_ids(df: DataFrame, col: str, ids, *cols: str) -> list[dict[str, Any]]:
+    """*cols* of the rows of *df* whose *col* is in *ids* (a driver-side
+    set, sent as one literal filter): one job, none for an empty set."""
+    return _rows(df.filter(id_filter(col, ids)).select(*cols)) if ids else []
 
 
 class LSPService:
@@ -161,25 +168,19 @@ class AdvancedService:
         """J4 (query.go:203-242): seed = definition of *symbol*; walk
         CALLS backwards (who calls the seed) up to *max_depth*; then
         EXPOSES_API → affected routes. DISTINCT endpoints ⇒ BFS with a
-        visited set is Cypher-equivalent (SURVEY §7.3)."""
-        seeds = self.g.nodes.filter(F.col("symbol") == symbol).select("id")
-        defs = self.g.edges.filter(F.col("type") == "DEFINES")
-        seed_defs = (
-            seeds.join(defs, seeds.id == defs.dst).select(F.col("src").alias("id"))
-            .unionByName(seeds)  # symbol node may itself be the definition
-        )
-        affected = bfs_reachable(
-            self.g.edges, seed_defs, max_hops=max_depth,
-            edge_type="CALLS", direction="in",
-        )
-        fn_rows = _rows(
-            affected.join(self.g.nodes, "id").select("id", "name", "label", "hops")
-        )
-        routes = self.g.out_neighbors(affected.select("id"), "EXPOSES_API")
+        visited set is Cypher-equivalent (SURVEY §7.3). One job per
+        lookup and per superstep."""
+        sym = [r.id for r in self.g.nodes.filter(F.col("symbol") == symbol).select("id").collect()]
+        # the symbol node may itself be the definition
+        seeds = sym + [r["src"] for r in _by_ids(self.g.out_edges("DEFINES"), "dst", sym, "src")]
+        visited = bfs_visited(self.g.edges, seeds, max_depth, "CALLS", "in")
+        hops = {i: h for i, h in visited.items() if h}
+        routes = {r["dst"] for r in _by_ids(self.g.out_edges("EXPOSES_API"), "src", hops, "dst")}
+        rows = _by_ids(self.g.nodes, "id", hops.keys() | routes, "id", "name", "label")
         return {
             "symbol": symbol,
-            "affectedFunctions": fn_rows,
-            "affectedAPIs": _rows(routes.select("id", "name", "label").distinct()),
+            "affectedFunctions": [{**r, "hops": hops[r["id"]]} for r in rows if r["id"] in hops],
+            "affectedAPIs": [r for r in rows if r["id"] in routes],
             "maxDepth": max_depth,
         }
 
@@ -252,27 +253,17 @@ class AdvancedService:
                          max_depth: int = 5) -> dict:
         """BuildCallGraph (advanced.go:242-290): bounded expansion from
         the root; returns the node/edge result model. direction ∈
-        outgoing(out)/incoming(in)/both."""
-        seeds = self.g.nodes.filter(F.col("id") == root_id).select("id")
-        reach = bfs_reachable(
-            self.g.edges, seeds, max_hops=max_depth,
-            edge_type="CALLS", direction=direction, include_sources=True,
-        )
-        node_rows = _rows(reach.join(self.g.nodes, "id")
-                          .select("id", "name", "label", "hops"))
-        ids = reach.select("id")
-        calls = self.g.edges.filter(F.col("type") == "CALLS")
-        sub_edges = (
-            calls.join(ids.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-        )
+        outgoing(out)/incoming(in)/both. One job per lookup and superstep."""
+        visited = bfs_visited(self.g.edges, [root_id], max_depth, "CALLS", direction)
+        rows = _by_ids(self.g.nodes, "id", visited, "id", "name", "label")
+        found = any(r["id"] == root_id for r in rows)
+        edges = _by_ids(self.g.out_edges("CALLS"), "src", visited if found else (), "src", "dst")
         return {
             "root": root_id,
             "direction": direction,
             "maxDepth": max_depth,
-            "nodes": node_rows,
-            "edges": _rows(sub_edges),
+            "nodes": [{**r, "hops": visited[r["id"]]} for r in rows] if found else [],
+            "edges": [e for e in edges if e["dst"] in visited],
         }
 
 
@@ -337,9 +328,9 @@ class MCPService:
         return out
 
     def analyze_function(self, name: str) -> dict:
-        """Three sequential lookups like the reference
-        (main.go:423-430, :479-483, :501-505): metadata, callers
-        (limit 10), callees (limit 10) — J7."""
+        """Metadata, callers (limit 10) and callees (limit 10) like the
+        reference (main.go:423-430, :479-483, :501-505) — J7 — in three
+        jobs: the function, its CALLS edges, the names at their ends."""
         fn = (
             self.g.nodes.filter(
                 F.col("label").isin("Function", "Method") & (F.col("name") == name)
@@ -349,14 +340,22 @@ class MCPService:
         if not rows:
             return {"error": f"function {name!r} not found"}
         meta = rows[0]
-        me = self.g.nodes.filter(F.col("id") == meta["id"]).select("id")
-        callers = self.g.in_neighbors(me, "CALLS").orderBy("name").limit(10)
-        callees = self.g.out_neighbors(me, "CALLS").orderBy("name").limit(10)
+        me = meta["id"]
+        calls = self.g.out_edges("CALLS").filter((F.col("src") == me) | (F.col("dst") == me))
+        calls = calls.select("src", "dst").collect()
+        names: dict[Any, list] = {}
+        for r in _by_ids(self.g.nodes, "id", {i for e in calls for i in e}, "id", "name"):
+            names.setdefault(r["id"], []).append(r["name"])
+
+        def first10(ids):  # orderBy("name").limit(10), nulls first
+            got = [n for i in ids for n in names.get(i, ())]
+            return sorted(got, key=lambda n: (n is not None, n or ""))[:10]
+
         return {
             "name": name,
             "metadata": {k: meta.get(k) for k in
                          ("id", "label", "signature", "complexity", "docstring",
                           *_LOC_COLS)},
-            "callers": [r["name"] for r in _rows(callers.select("name"))],
-            "callees": [r["name"] for r in _rows(callees.select("name"))],
+            "callers": first10(src for src, dst in calls if dst == me),
+            "callees": first10(dst for src, dst in calls if src == me),
         }

@@ -538,8 +538,12 @@ def index_documents(
     MENTIONS links are resolved against it (indexer.go:62-65).
     Returns (nodes, edges). Deterministic for a fixed tree, so
     re-indexing is exactly idempotent (the reference's re-index
-    invariant, indexing_test.go)."""
-    records = document_records(walk_documents(spark, root)).persist()
+    invariant, indexing_test.go). The parsed records are truncated by
+    a lazy ``localCheckpoint``, as ``split_records`` does: parsed once for
+    all their readers, and not registered with Spark's plan-matching
+    cache, so re-indexing an edited tree in the same session parses it
+    again instead of serving the old parse."""
+    records = document_records(walk_documents(spark, root)).localCheckpoint(eager=False)
     nodes, edges, mentions = split_document_records(records)
     if symbols is not None:
         edges = edges.unionByName(link_mentions(mentions, symbols))

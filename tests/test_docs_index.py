@@ -192,6 +192,24 @@ def test_reindex_is_idempotent(spark, doc_dir, doc_graph):
     assert edges2.count() == doc_graph.edges.count()
 
 
+def test_reindex_same_session_sees_edited_doc(spark, tmp_path):
+    """Re-indexing an edited tree in the same session parses it again:
+    the new mention appears and the old one is gone."""
+    symbols = spark.createDataFrame(
+        [("sym:alpha", "alpha_fn", "pkg alpha_fn"), ("sym:beta", "beta_fn", "pkg beta_fn")],
+        "id string, name string, symbol string",
+    )
+    doc = tmp_path / "notes.md"
+
+    def mentioned(text):
+        doc.write_text(f"# Notes\n\nThe loader calls `{text}` on start.\n")
+        _, edges = index_documents(spark, str(tmp_path), symbols=symbols)
+        return {r["dst"] for r in edges.filter(F.col("type") == "MENTIONS").collect()}
+
+    assert mentioned("alpha_fn") == {"sym:alpha"}
+    assert mentioned("beta_fn") == {"sym:beta"}
+
+
 # --- cross-context integration (indexing_test.go:290-364) --------------------
 
 @pytest.fixture(scope="module")

@@ -145,3 +145,13 @@ def test_salted_self_pairs_fuzz(spark, rows):
         ).collect()
     )
     assert got == want
+
+
+@pytest.mark.parametrize("n_salt", [0, -1])
+def test_salted_self_pairs_rejects_nonpositive_salt(spark, n_salt):
+    """n_salt < 1 has no salt shard to own a hot pair: rejected up front."""
+    from codegraph_spark.operators.skew import salted_self_pairs
+
+    df = spark.createDataFrame([("d0", "k0")], "doc_id string, shingle string")
+    with pytest.raises(ValueError, match="n_salt"):
+        salted_self_pairs(df, ["shingle"], "doc_id", n_salt=n_salt)
