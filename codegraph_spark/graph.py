@@ -23,15 +23,6 @@ from pyspark.sql import functions as F
 NODE_REQUIRED = ("id", "label")
 EDGE_REQUIRED = ("src", "dst", "type")
 
-# Serving-layer cache: the recast graph is the engine's ingested state
-# (the reference serves every query from a warm Neo4j store — client.go
-# pools connections to it). Rebuilding nodes/edges from raw parquet per
-# query would repeat the ingest shuffle (lineitem window) every request;
-# at 100 TB that is the difference between "query the graph" and
-# "re-ingest per query". Keyed by (applicationId, sf_dir).
-_RECAST_CACHE: dict[tuple[str, str], "PropertyGraph"] = {}
-
-
 class PropertyGraph:
     def __init__(self, nodes: DataFrame, edges: DataFrame):
         for c in NODE_REQUIRED:
@@ -58,9 +49,9 @@ class PropertyGraph:
 
         if not cached:
             return cls(graph_nodes(spark, sf_dir), graph_edges(spark, sf_dir))
-        key = (spark.sparkContext.applicationId, sf_dir)
-        g = _RECAST_CACHE.get(key)
-        if g is None:
+        from codegraph_spark.serving import shared_obj
+
+        def build() -> "PropertyGraph":
             # Compact before persisting: the nodes/edges plans are unions
             # of many per-table scans, so their natural partition count is
             # the SUM of all input partitionings (130+ even at sf0.1).
@@ -69,12 +60,18 @@ class PropertyGraph:
             # cluster, size by target partition bytes instead; the
             # invariant is task count = O(cores), not O(input unions).
             p = spark.sparkContext.defaultParallelism
-            g = cls(
+            return cls(
                 graph_nodes(spark, sf_dir).repartition(p),
                 graph_edges(spark, sf_dir).repartition(p),
             ).persist()
-            _RECAST_CACHE[key] = g
-        return g
+
+        # Serving-layer cache: the recast graph is the engine's ingested
+        # state (the reference serves every query from a warm Neo4j
+        # store — client.go pools connections to it). Rebuilding it per
+        # query would repeat the ingest shuffle (lineitem window) every
+        # request. ``serving.invalidate(sf_dir)`` and the dataset LRU
+        # release it through :meth:`unpersist`.
+        return shared_obj(spark, (sf_dir, "recast_graph"), build)
 
     def persist(self) -> "PropertyGraph":
         """Cache both tables — the serving-layer pattern (the reference
@@ -83,6 +80,13 @@ class PropertyGraph:
         self.nodes = self.nodes.persist()
         self.edges = self.edges.persist()
         return self
+
+    def unpersist(self) -> None:
+        """Release the cached blocks of both tables and of every
+        structure memoized on the graph (closures, typed edges, views)."""
+        for df in [self.nodes, self.edges, *self._closures.values(),
+                   *self._typed_edges.values()]:
+            df.unpersist()
 
     def write_parquet(self, nodes_path: str, edges_path: str, mode: str = "overwrite") -> None:
         # Partition by label/type: the Spark analog of Neo4j's

@@ -1,28 +1,32 @@
-"""PageRank as iterative DataFrame joins — importance ranking over the
-code graph (hub functions / hot symbols), the measure behind "what are
-the most load-bearing nodes in this codebase".
+"""PageRank as a fixed number of supersteps — importance ranking over
+the code graph (hub functions / hot symbols), the measure behind "what
+are the most load-bearing nodes in this codebase".
 
 The reference has no equivalent (Neo4j GDS would be its path); this is
 a scale extension in the spirit of SURVEY §2's traversal family.
 
-Scale design (the lessons measured in operators/traversal.py apply):
-- one rank update = ONE equi-join edges ⋈ ranks on ``src`` (shuffle
-  partitioned by the join key; edges are scanned from cache each round,
-  ranks are the only moving state — O(nodes) rows);
-- dangling-node mass (sinks lose their rank otherwise) is folded back
-  each round via a 1-row aggregate broadcast-joined into the update —
-  no driver-side scalar collection inside the loop;
-- every round ends in a LAZY ``localCheckpoint`` — flat plans, zero
-  in-loop driver actions, all rounds materialize under the caller's
-  single action (measured ~25% faster than per-round barriers on the
-  bounded traversals, and the visited-set O(k²) rescan trap does not
-  arise here because ``ranks`` is replaced, not unioned).
+Global and personalized PageRank are one walk (:func:`_walk`): global
+PageRank is the walk whose restart set is every node. Each round is
+one :func:`~codegraph_spark.operators.supersteps.supersteps` round:
+- one equi-join edges ⋈ ranks on ``src`` plus a group-by on ``dst``;
+  the state is O(nodes) rows, each node's rank beside its out-degree,
+  which is joined once before the first round;
+- dangling-node mass (sinks lose their rank otherwise) returns to the
+  restart set through a 1-row aggregate broadcast into the update, so
+  no driver scalar is collected inside the loop;
+- the global walk's restart vector is a literal, with no seed join;
+  the personalized walk carries a ``seed`` flag column in its state,
+  joined once from the seed set before the first round.
+The rounds end in lazy checkpoints and materialize under the caller's
+action.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from codegraph_spark.operators.supersteps import supersteps
 
 
 def pagerank(
@@ -37,55 +41,7 @@ def pagerank(
         pass it explicitly so isolated nodes keep rank mass).
     :param edges: DataFrame with ``src``/``dst`` columns.
     """
-    n = nodes.select("id").distinct().localCheckpoint(eager=True)
-    n_count = n.count()  # one action up front (also sizes the teleport)
-    if n_count == 0:
-        return n.withColumn("rank", F.lit(0.0))
-
-    out_deg = (
-        edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-        .select(F.col("src").alias("deg_id"), "out_deg")
-        .localCheckpoint(eager=False)
-    )
-    e = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
-    teleport = (1.0 - damping) / n_count
-
-    ranks = n.withColumn("rank", F.lit(1.0 / n_count)).localCheckpoint(eager=True)
-    for _ in range(iters):
-        with_deg = ranks.join(
-            out_deg, F.col("id") == F.col("deg_id"), "left"
-        ).select("id", "rank", "out_deg")
-        # mass from actual links
-        contribs = (
-            with_deg.filter(F.col("out_deg").isNotNull())
-            .join(e, F.col("id") == F.col("e_src"))
-            .select(F.col("e_dst").alias("id"),
-                    (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("link_mass"))
-        )
-        # dangling nodes spread their rank uniformly: 1-row aggregate,
-        # broadcast into the update (never a driver scalar in-loop)
-        dangling = with_deg.filter(F.col("out_deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
-        )
-        ranks = (
-            n.join(contribs, "id", "left")
-            .join(F.broadcast(dangling))
-            .select(
-                "id",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("link_mass"), F.lit(0.0))
-                        + F.col("dangling_mass") / n_count
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    return _walk(nodes, edges, None, iters, damping)
 
 
 def personalized_pagerank(
@@ -101,72 +57,76 @@ def personalized_pagerank(
     anchor (random walk with restart), the "what matters around this
     entry point" twin of global :func:`pagerank`.
 
-    Same scale shape as the global walk: one edges ⋈ ranks equi-join
-    per round, dangling mass as a 1-row broadcast aggregate, lazy
-    checkpoints, zero in-loop actions. The only new piece is a seed
-    indicator joined into the update — seed-count-sized, broadcast.
-
     :param seeds: DataFrame with an ``id`` column; rows outside
         ``nodes`` are ignored (intersected first so rank mass stays
         normalized)."""
+    return _walk(nodes, edges, seeds, iters, damping)
+
+
+def _walk(
+    nodes: DataFrame,
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    iters: int,
+    damping: float,
+) -> DataFrame:
+    """``(id, rank)`` after ``iters`` rounds of the random walk that
+    restarts uniformly on ``seeds`` (every node when ``None``). Both
+    cases evaluate ``restart + damping * (link_mass + dangling / n)``
+    in that IEEE order, with ``restart = (1 - damping) / n`` folded on
+    the driver, where ``n`` is the size of the restart set."""
     n = nodes.select("id").distinct().localCheckpoint(eager=True)
-    s = seeds.select("id").distinct().join(n, "id").localCheckpoint(eager=True)
-    s_count = s.count()
-    if s_count == 0:
+    if seeds is None:
+        ranks, n_seeds = n, n.count()
+
+        def on_seeds(c):
+            return c
+    else:
+        s = seeds.select("id").distinct().join(n, "id").localCheckpoint(eager=True)
+        flags = F.broadcast(s.withColumn("seed", F.lit(True)))
+        ranks, n_seeds = n.join(flags, "id", "left"), s.count()
+
+        def on_seeds(c):
+            return F.when(F.col("seed"), c).otherwise(F.lit(0.0))
+
+    if n_seeds == 0:
         return n.withColumn("rank", F.lit(0.0)).limit(0)
-
-    out_deg = (
-        edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-        .select(F.col("src").alias("deg_id"), "out_deg")
-        .localCheckpoint(eager=False)
-    )
+    out_deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
+    ranks = ranks.join(
+        out_deg, F.col("id") == F.col("src"), "left"
+    ).select(*ranks.columns, "out_deg", on_seeds(F.lit(1.0 / n_seeds)).alias("rank"))
     e = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
-    seed_share = F.broadcast(s.withColumn("_seed", F.lit(1)))
-    restart = (1.0 - damping) / s_count
+    restart = (1.0 - damping) / n_seeds
+    carried = [c for c in ranks.columns if c != "rank"]
 
-    ranks = (
-        n.join(seed_share, "id", "left")
-        .select(
-            "id",
-            F.when(F.col("_seed") == 1, F.lit(1.0 / s_count))
-            .otherwise(F.lit(0.0))
-            .alias("rank"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        with_deg = ranks.join(
-            out_deg, F.col("id") == F.col("deg_id"), "left"
-        ).select("id", "rank", "out_deg")
+    def pagerank_round(ranks: DataFrame) -> DataFrame:
         contribs = (
-            with_deg.filter(F.col("out_deg").isNotNull())
+            ranks.filter(F.col("out_deg").isNotNull())
             .join(e, F.col("id") == F.col("e_src"))
             .select(F.col("e_dst").alias("id"),
                     (F.col("rank") / F.col("out_deg")).alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("link_mass"))
         )
-        dangling = with_deg.filter(F.col("out_deg").isNull()).agg(
+        dangling = ranks.filter(F.col("out_deg").isNull()).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass")
         )
-        is_seed = F.col("_seed") == 1
-        ranks = (
-            n.join(seed_share, "id", "left")
+        return (
+            ranks.drop("rank")
             .join(contribs, "id", "left")
             .join(F.broadcast(dangling))
             .select(
-                "id",
+                *carried,
                 (
-                    F.when(is_seed, F.lit(restart)).otherwise(F.lit(0.0))
+                    on_seeds(F.lit(restart))
                     + F.lit(damping)
                     * (
                         F.coalesce(F.col("link_mass"), F.lit(0.0))
-                        + F.when(
-                            is_seed, F.col("dangling_mass") / s_count
-                        ).otherwise(F.lit(0.0))
+                        + on_seeds(F.col("dangling_mass") / n_seeds)
                     )
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
         )
-    return ranks
+
+    ranks, _ = supersteps(ranks, pagerank_round, rounds=iters)
+    return ranks.select("id", "rank")

@@ -20,11 +20,14 @@ small and the edge table is scanned in place, never shuffled.
   ids, :func:`id_filter`) and halts at the first empty frontier; a
   traced ``code_serving`` benchmark run averages 2.0 jobs per serving
   op (``tests/test_serving_overhead.py`` pins per-call counts);
-- :func:`bfs_multi_source` and :func:`enumerate_paths` broadcast their
-  frontier into one equi-join per round, chained through lazy
-  ``localCheckpoint(eager=False)`` (without it round k's plan replays
-  rounds 1..k-1) under the caller's one action. Every round runs, even
-  once the frontier is empty; enumerate_paths counts every 5 rounds.
+- :func:`transitive_closure` is a loop of the shared
+  :func:`~codegraph_spark.operators.supersteps.supersteps`;
+- :func:`bfs_multi_source` and :func:`enumerate_paths` accumulate a
+  level per hop under :func:`_tiny_shuffle`, so they keep their own
+  loops: the frontier is broadcast into one equi-join per round,
+  chained through lazy ``localCheckpoint(eager=False)`` under the
+  caller's one action. Every round runs, even once the frontier is
+  empty; enumerate_paths counts every 5 rounds.
 """
 
 from __future__ import annotations
@@ -34,6 +37,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from codegraph_spark.operators.supersteps import supersteps
 
 
 def _directed(edges: DataFrame, edge_type: str | None, direction: str) -> DataFrame:
@@ -227,26 +232,24 @@ def transitive_closure(edges: DataFrame, max_depth: int = 64) -> DataFrame:
     (query.go:126, :292).
 
     Uses path-doubling (closure ⋈ closure), so a depth-d hierarchy
-    converges in ⌈log2 d⌉ rounds instead of d — at 100 TB the CONTAINS
-    forest is shallow (≤ 6 levels) and this is 3 rounds of equi-joins.
-    Safe on cycles (converges to SCC-pairs), intended for DAGs/forests.
+    closes in ⌈log2 d⌉ supersteps instead of d, plus one whose unchanged
+    size confirms it — at 100 TB the CONTAINS forest is shallow (≤ 6
+    levels) and this is 4 rounds of equi-joins. A graph still growing
+    after the doublings that span ``max_depth`` hops raises
+    ``RuntimeError`` instead of returning a partial closure. Safe on
+    cycles (converges to SCC-pairs), intended for DAGs/forests.
     """
-    clo = edges.select("src", "dst").distinct().localCheckpoint(eager=False)
-    size = clo.count()  # materializes the checkpoint (one job)
-    depth = 1
-    while depth < max_depth:
+
+    def doubling_round(clo: DataFrame) -> DataFrame:
         a, b = clo.alias("a"), clo.alias("b")
-        new = (
-            a.join(b, F.col("a.dst") == F.col("b.src"))
-            .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
+        longer = a.join(b, F.col("a.dst") == F.col("b.src")).select(
+            F.col("a.src").alias("src"), F.col("b.dst").alias("dst")
         )
-        merged = clo.unionByName(new).distinct().localCheckpoint(eager=False)
-        merged_size = merged.count()  # one job per doubling round
-        if merged_size == size:
-            break
-        clo, size = merged, merged_size
-        depth *= 2
-    return clo
+        return clo.unionByName(longer).distinct()
+
+    start = edges.select("src", "dst").distinct()
+    rounds = max_depth.bit_length() + 1
+    return supersteps(start, doubling_round, rounds=rounds, witness=DataFrame.count)[0]
 
 
 def enumerate_paths(

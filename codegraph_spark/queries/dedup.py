@@ -21,6 +21,7 @@ from codegraph_spark.queries.similarity import (
     plant_clones,
 )
 from codegraph_spark.colmemo import memo_cols
+from codegraph_spark.operators.supersteps import supersteps
 from codegraph_spark.sources.tables import load_table
 
 # MinHash parameters: k=16 hash functions h_i(x) = (a_i*x + b_i) mod P,
@@ -1003,7 +1004,8 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(doc_id, cluster_id)`` — the converged min-label CC assignment
     of :func:`dedup_cluster_cc`, serving-cached per (app, dataset) so
-    cluster CONSUMERS (keeper selection) don't re-run the peel."""
+    cluster CONSUMERS (keeper selection) don't re-run the peel. Labels
+    only shrink, so the loop runs to its fixpoint with no round cap."""
     from codegraph_spark.serving import shared_df
 
     def build() -> DataFrame:
@@ -1027,25 +1029,23 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("key"),
         ).localCheckpoint(eager=False)
-        labels = docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
-        prev_sum = None
-        for _ in range(8):  # diameter bound; dup clusters are shallow
+
+        def cluster_round(labels: DataFrame) -> DataFrame:
             key_min = (
                 dk.join(labels, "doc_id")
                 .groupBy("key")
                 .agg(F.min("cluster_id").alias("kmin"))
             )
-            labels = (
+            return (
                 dk.join(key_min, "key")
                 .groupBy("doc_id")
                 .agg(F.min("kmin").alias("cluster_id"))
-                .localCheckpoint(eager=False)
             )
-            cur_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        return labels
+
+        start = docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
+        return supersteps(
+            start, cluster_round, witness=lambda df: df.agg(F.sum("cluster_id")).first()[0]
+        )[0]
 
     return shared_df(spark, (sf_dir, "dedup", "cc_labels"), build)
 

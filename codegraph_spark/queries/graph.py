@@ -395,11 +395,12 @@ FROM gnodes WHERE symbol IS NOT NULL
 
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Importance ranking over the CALLS graph (operators/pagerank.py):
-    top-20 nodes by PageRank, deterministic tiebreak on id. The fixed
-    iteration count (10) and damping make the whole computation
-    mechanically unrollable, so the oracle is 10 generated chained CTEs
-    (_pagerank_sql) — one link-mass + dangling-mass + update triple per
-    iteration, mirroring the operator's arithmetic exactly.
+    top-20 nodes by PageRank, deterministic tiebreak on id. The walk
+    runs 10 fixed supersteps of the shared loop (operators/supersteps.py,
+    no witness), so the whole computation is mechanically unrollable
+    and the oracle is 10 generated chained CTEs (_pagerank_sql) — one
+    link-mass + dangling-mass + update triple per superstep, mirroring
+    the operator's arithmetic and IEEE operation order exactly.
     tests/test_pagerank.py additionally pins the numerics against a
     pure-Python power iteration."""
     from codegraph_spark.operators.pagerank import pagerank
@@ -564,12 +565,14 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     j4 impact seeds (Customer 1's Orders): where j4's BFS answers
     "which nodes are reachable", PPR answers "which of them MATTER,
     weighted by walk probability from the anchor" — the ranked-impact
-    view a blast-radius dashboard shows. Teleport and dangling mass
-    both return to the seed set (operators/pagerank.py
-    personalized_pagerank); nodes the walk never reaches hold rank
-    exactly 0.0 and are filtered. Deterministic (fixed iters/damping,
-    total-order output), so the oracle unrolls into chained CTEs like
-    :func:`_pagerank_sql` with a seed-indicator teleport."""
+    view a blast-radius dashboard shows. It is the same walk as
+    :func:`graph_pagerank` (operators/pagerank.py, 10 fixed supersteps
+    of the shared loop) with the restart set narrowed to the seeds:
+    teleport and dangling mass both return to the seed set, and nodes
+    the walk never reaches hold rank exactly 0.0 and are filtered.
+    Deterministic (fixed iters/damping, total-order output), so the
+    oracle unrolls into chained CTEs like :func:`_pagerank_sql` with a
+    seed-indicator teleport."""
     from codegraph_spark.operators.pagerank import personalized_pagerank
     from codegraph_spark.queries.traversals import _j4_seeds
 

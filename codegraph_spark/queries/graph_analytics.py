@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from codegraph_spark.operators.supersteps import supersteps
 from codegraph_spark.oracle import with_recast
 from codegraph_spark.sources.tables import load_table
 
@@ -301,52 +302,44 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     part co-occurrence graph: each node starts as its own label; every
     round it adopts the most frequent label among its neighbors AND
     itself (ties to the smallest label — fully deterministic, unlike
-    textbook random-order LPA). Fixed ``_LPA_ITERS`` rounds, so the
-    whole computation is mechanically unrollable and the oracle is
-    generated chained CTEs (one neighbor-mode round each), exactly the
-    _pagerank_sql() technique.
+    textbook random-order LPA). ``_LPA_ITERS`` fixed supersteps of the
+    shared loop (operators/supersteps.py, no witness: LPA labels are
+    not monotone), so the whole computation is mechanically unrollable
+    and the oracle is generated chained CTEs (one neighbor-mode round
+    each), exactly the _pagerank_sql() technique.
 
     Scale shape per round: one equi-join of the (static, persisted)
     symmetric adjacency against the label table, one
     map-side-combining count, one per-node top-1 window partitioned by
-    node — all shuffles on the node key, reusable across rounds.
-    Output is the community-size profile (top-15 by size)."""
+    node — all shuffles on the node key. Each round's lazy checkpoint
+    keeps the twice-referenced label table from re-expanding its
+    lineage. Output is the community-size profile (top-15 by size)."""
     from pyspark.sql import Window
 
     adj = _symmetric_adjacency(spark, sf_dir)
 
     def build_labels() -> DataFrame:
-        labels = adj.select("node").distinct().select(
-            "node", F.col("node").alias("label")
-        )
         w = Window.partitionBy("node").orderBy(F.desc("cnt"), "label")
-        rounds: list[DataFrame] = []
-        for _ in range(_LPA_ITERS):
+
+        def lpa_round(labels: DataFrame) -> DataFrame:
             nbr_labels = adj.join(
                 labels.withColumnRenamed("node", "nbr"), "nbr"
             ).select("node", "label")
-            self_labels = labels.select("node", "label")
             votes = (
-                nbr_labels.unionByName(self_labels)
+                nbr_labels.unionByName(labels)
                 .groupBy("node", "label")
                 .agg(F.count(F.lit(1)).alias("cnt"))
             )
-            # persist every round: the label table is referenced twice
-            # next round (neighbor join + self votes) — unpersisted,
-            # the lineage re-expands 2^iters
-            labels = (
+            return (
                 votes.withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1)
                 .select("node", "label")
-            ).persist()
-            rounds.append(labels)
-        # _shared materializes the FINAL table before this builder's
-        # scaffolding goes away; round intermediates then unpersist so
-        # a serving session holds exactly one cached label table
-        final = labels.localCheckpoint(eager=True)
-        for r in rounds:
-            r.unpersist()
-        return final
+            )
+
+        start = adj.select("node").distinct().select(
+            "node", F.col("node").alias("label")
+        )
+        return supersteps(start, lpa_round, rounds=_LPA_ITERS)[0]
 
     labels = _shared(spark, sf_dir, "lpa_labels", build_labels)
     return (
@@ -413,46 +406,26 @@ _KCORE_ORACLE_ROUNDS = 12
 
 
 def _kcore_peel(adj: DataFrame, k: int = _KCORE_K) -> tuple[DataFrame, int]:
-    """Synchronous k-core peel to the EMPTY-DELTA FIXPOINT: each round
-    drops every node whose degree in the surviving subgraph is below
-    k, looping until a round drops nothing (the one-scalar-per-round
-    convergence pattern of dedup_cluster_cc — r5 VERDICT item 2: the
-    former fixed 8-round unroll returned non-core nodes as core on any
-    graph whose peel cascade runs deeper, e.g. a path-power chain
-    feeding a clique; peel depth grows with graph diameter, and the
-    driver fixture could never catch it because it converges early).
+    """Synchronous k-core peel to the checked fixpoint: each superstep
+    drops every edge touching a node of degree < k in the surviving
+    subgraph (one map-side-combining degree count, two node-keyed
+    semi-joins), halting when the surviving edge count stops changing.
+    A fixed round count would return non-core nodes as core whenever
+    the peel cascades deeper (r5 VERDICT item 2: a path-power chain
+    feeding a clique). Returns (surviving symmetric edge list, rounds
+    run, the confirming round included)."""
 
-    Returns (surviving symmetric edge list, rounds executed).
-    Termination is structural: the kept-node count is a non-negative
-    integer that strictly decreases every non-final round.
-
-    Scale shape per round: one map-side-combining degree count over
-    the surviving edge list + two semi-joins keyed by node id to drop
-    edges touching peeled nodes — the edge list only ever shrinks, and
-    ``localCheckpoint`` keeps the plan flat (no 2^rounds lineage). The
-    convergence check is one driver-side scalar off the
-    already-materialized keep table, never a data collect."""
-    cur = adj
-    prev_kept = -1
-    rounds = 0
-    while True:
-        deg = cur.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
+    def peel_round(cur: DataFrame) -> DataFrame:
         keep = (
-            deg.filter(F.col("deg") >= k)
+            cur.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k)
             .select("node")
-            .localCheckpoint(eager=True)  # one materialization: count + 2 joins
         )
-        n_keep = keep.count()
-        if n_keep == prev_kept or n_keep == 0:
-            break  # empty delta (or empty core): cur is the fixpoint
-        prev_kept = n_keep
-        cur = (
-            cur.join(keep, "node", "left_semi")
-            .join(keep.withColumnRenamed("node", "nbr"), "nbr", "left_semi")
-            .localCheckpoint(eager=False)  # flat plan per round
+        return cur.join(keep, "node", "left_semi").join(
+            keep.withColumnRenamed("node", "nbr"), "nbr", "left_semi"
         )
-        rounds += 1
-    return cur, rounds
+
+    return supersteps(adj, peel_round, witness=DataFrame.count)
 
 
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:

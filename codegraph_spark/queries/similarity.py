@@ -248,11 +248,6 @@ def assign_ivf(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-#: trained inverted file per (applicationId, sf_dir) — IVF training is
-#: ingest-time work (like the graph recast / trigram index); serving
-#: probes the warm posting lists.
-_IVF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 #: assignment policy thresholds (r7 VERDICT item 2 — the escalation is
 #: now a DISPATCH RULE at the production seam, not a docstring hint).
 #: Below _IVF_BNLJ_MAX_K centroids the JVM-side broadcast-join argmax
@@ -323,18 +318,18 @@ def assign_ivf_auto(
 
 
 def _trained_inverted_file(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-time IVF build; assignment goes through the
-    :func:`assign_ivf_auto` policy seam (at the gate's k=8 that
+    """Ingest-time IVF build, trained once per (app, dataset) and
+    served warm through ``serving.shared_df``; assignment goes through
+    the :func:`assign_ivf_auto` policy seam (at the gate's k=8 that
     resolves to the JVM broadcast-join kernel — same plan as before
     the seam existed)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    inv = _IVF_CACHE.get(key)
-    if inv is None:
+    from codegraph_spark.serving import shared_df
+
+    def build() -> DataFrame:
         emb = _emb(spark, sf_dir)
-        cents = train_ivf_kmeans(emb, k=8, iters=2)
-        inv = assign_ivf_auto(emb, cents).persist()
-        _IVF_CACHE[key] = inv
-    return inv
+        return assign_ivf_auto(emb, train_ivf_kmeans(emb, k=8, iters=2))
+
+    return shared_df(spark, (sf_dir, "ivf_trained"), build, eager=False)
 
 
 def sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2140,8 +2135,8 @@ def _pq_adc_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     inv = _trained_inverted_file(spark, sf_dir)  # (vec_id, v, cluster)
     sv = _pq_subvectors(emb).localCheckpoint(eager=False)
-    # codebook + codes are ingest-time artifacts (the _IVF_CACHE
-    # pattern): train once per (app, dataset), serve warm thereafter
+    # codebook + codes are ingest-time artifacts (like the trained
+    # inverted file): train once per (app, dataset), serve warm thereafter
     from codegraph_spark.serving import shared_df
 
     cents = shared_df(spark, (sf_dir, "pq", "codebook"), lambda: _train_pq(sv))

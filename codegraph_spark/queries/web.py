@@ -584,8 +584,10 @@ def text_html_extract_dirty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash.
 
     Scale shape: one Arrow-batched map pass per document (the codec
-    precedent), narrow stats out, zero shuffles before the bounded
-    output ordering."""
+    precedent), narrow stats out. The only exchange is the ``doc_id``
+    hash spread ahead of the wrap (:func:`spread`, taken only when the
+    scan arrives with fewer partitions than cores); there is no sort,
+    so the output rows are unordered."""
     # spread BEFORE building the page (r13): the adversarial wrap is a
     # heavy per-row string program, and a projection ahead of the
     # repartition runs on the scan's single local partition (1 core of
@@ -869,7 +871,7 @@ def web_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: file-granular parallel scan (how CommonCrawl shards —
     ~1 GiB WARC files), one sequential member walk per file (the
     format's contract), then the zero-shuffle per-page extraction;
-    output bounded by the subset."""
+    output bounded by the subset and unordered (no final sort)."""
     from codegraph_spark.sources.warc import read_warc_responses
 
     root = _warc_fixture_dir(spark, sf_dir)
