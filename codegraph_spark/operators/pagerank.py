@@ -128,5 +128,5 @@ def _walk(
             )
         )
 
-    ranks, _ = supersteps(ranks, pagerank_round, rounds=iters)
+    ranks = supersteps(ranks, pagerank_round, rounds=iters)[0]
     return ranks.select("id", "rank")

@@ -239,8 +239,7 @@ def scc_assignments(
             e_n.select(F.col("dst").alias("id")), "id", "semi"
         )
 
-    n = supersteps(n, trim_round, witness=DataFrame.count)[0]
-    n_nodes = n.count()
+    n, _, n_nodes = supersteps(n, trim_round, witness=DataFrame.count, start_witness=n_nodes)
     # (2) peel by FW/BW min-label coloring: an SCC's members share one
     # reach set, hence one (fwd, bwd) pair — a round assigns exactly
     # the SCCs whose fwd == bwd (always ≥ the SCC of the smallest

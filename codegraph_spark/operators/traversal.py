@@ -20,20 +20,19 @@ small and the edge table is scanned in place, never shuffled.
   ids, :func:`id_filter`) and halts at the first empty frontier; a
   traced ``code_serving`` benchmark run averages 2.0 jobs per serving
   op (``tests/test_serving_overhead.py`` pins per-call counts);
-- :func:`transitive_closure` is a loop of the shared
-  :func:`~codegraph_spark.operators.supersteps.supersteps`;
-- :func:`bfs_multi_source` and :func:`enumerate_paths` accumulate a
-  level per hop under :func:`_tiny_shuffle`, so they keep their own
-  loops: the frontier is broadcast into one equi-join per round,
-  chained through lazy ``localCheckpoint(eager=False)`` under the
-  caller's one action. Every round runs, even once the frontier is
-  empty; enumerate_paths counts every 5 rounds.
+- :func:`transitive_closure`, :func:`bfs_multi_source` and
+  :func:`enumerate_paths` are loops of the shared
+  :func:`~codegraph_spark.operators.supersteps.supersteps`; the two
+  seed-anchored ones (:func:`_hop_rounds`) broadcast the frontier
+  into a scan of every edge partition, run two jobs a round
+  (the broadcast and the count of the rows reached) and halt at the
+  first round that reaches no row.
 """
 
 from __future__ import annotations
 
 import json
-from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -52,27 +51,6 @@ def _directed(edges: DataFrame, edge_type: str | None, direction: str) -> DataFr
             e.select(F.col("dst").alias("_from"), F.col("src").alias("_to"))
         )
     raise ValueError(f"direction must be out|in|both, got {direction!r}")
-
-
-@contextmanager
-def _tiny_shuffle(df: DataFrame):
-    """Scope per-round shuffles of a seed-anchored traversal to one
-    partition, AQE off. Rationale: every round's shuffle moves only the
-    frontier (≪ edges at any data scale — the edge side is broadcast-
-    joined in place), so the default partition count just multiplies
-    task-launch overhead, and AQE adds a stage-materialization job per
-    round. Only the eager per-round checkpoints execute under this
-    scope; settings are restored before the caller's action runs."""
-    conf = df.sparkSession.conf
-    old_sp = conf.get("spark.sql.shuffle.partitions")
-    old_aqe = conf.get("spark.sql.adaptive.enabled")
-    conf.set("spark.sql.shuffle.partitions", "1")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old_sp)
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
 
 
 def id_filter(col: str, ids) -> Column:
@@ -140,6 +118,47 @@ def bfs_reachable(
     )
 
 
+def _rows(df: DataFrame) -> int:
+    """``df``'s row count as ONE job of one task per partition.
+    ``DataFrame.count`` plans an exchange that AQE runs as a job of its
+    own, and ``coalesce(1).count()`` would compute every partition of a
+    lazy checkpoint in one task."""
+    return df._jdf.queryExecution().toRdd().count()
+
+
+def _hop_rounds(start: DataFrame, e: DataFrame, key: str, max_hops: int, settle, extend) -> None:
+    """The superstep loop of the seed-anchored traversals. The state is
+    the rows reached at one hop (``start`` at hop 0). A round hands them
+    to ``settle(rows, hop)``, which keeps them and returns the frontier
+    to leave from; it broadcasts that frontier into a join with the
+    edges leaving its ``key`` node (the edges are scanned in place, in
+    every partition), and ``extend(joined, hop + 1)`` returns the rows
+    reached. Per round: the broadcast job, and the witness job that
+    counts the reached rows in parallel. The witness is their running
+    total, so the loop halts at the first round that reaches no row.
+    Past ``max_hops`` a round settles its input and reaches nothing,
+    with no job."""
+    hop = 0
+
+    def hop_round(rows: DataFrame) -> DataFrame:
+        nonlocal hop
+        frontier = F.broadcast(settle(rows, hop))
+        hop += 1
+        if hop > max_hops:
+            return rows.limit(0)
+        return extend(frontier.join(e, frontier[key] == e._from), hop)
+
+    total = 0
+
+    def reached(rows: DataFrame) -> int:
+        nonlocal total
+        if hop <= max_hops:
+            total += _rows(rows)
+        return total
+
+    supersteps(start, hop_round, witness=reached, start_witness=0)
+
+
 def bfs_multi_source(
     edges: DataFrame,
     seeds: DataFrame,
@@ -153,41 +172,36 @@ def bfs_multi_source(
     convention).
 
     The sampled-centrality shape (Eppstein & Wang 2004): k per-seed
-    BFS runs cost k × max_hops frontier rounds; tagging the frontier
-    with its seed instead costs max_hops rounds TOTAL — the visited
-    set keys by (seed, id). Rounds chain through lazy flat
-    localCheckpoints under the caller's action, with a broadcast
-    frontier; all ``max_hops`` rounds run, each with its own broadcast
-    jobs, even after the frontier empties.
+    BFS runs cost k × depth frontier rounds; tagging the frontier with
+    its seed instead costs one round per hop of the deepest seed, plus
+    the round that reaches no row. The visited set keys by (seed, id)
+    and keeps each pair's minimum hop count: one partition, regrouped
+    with the rows each round reaches, and its pairs of the last hop
+    are the next frontier. Rows that reach a pair again count as
+    reached, so when the last frontier only leads back into visited
+    pairs, one more round (with an empty frontier) ends the loop.
 
     :param seeds: DataFrame with ``seed`` (tag) and ``id`` (start
         node) columns — pass ``seed = id`` for plain multi-source.
     """
-    e = _directed(edges, edge_type, direction)
-    frontier = (
-        seeds.select("seed", "id").distinct().localCheckpoint(eager=True)
-    )
-    levels = [frontier.withColumn("hops", F.lit(0))]
-    seen = frontier
-    with _tiny_shuffle(edges):
-        for hop in range(1, max_hops + 1):
-            f, s = F.broadcast(frontier), F.broadcast(seen)
-            nxt = (
-                f.join(e, f.id == e._from)
-                .select("seed", F.col("_to").alias("id"))
-                .distinct()
-                .join(s, ["seed", "id"], "left_anti")
-                .localCheckpoint(eager=False)
-            )
-            levels.append(nxt.withColumn("hops", F.lit(hop)))
-            seen = seen.unionByName(nxt).localCheckpoint(eager=False)
-            frontier = nxt
-    visited = levels[0]
-    for lv in levels[1:]:
-        visited = visited.unionByName(lv)
-    return (
-        visited.localCheckpoint(eager=False).filter(F.col("hops") >= 1)
-    )
+    visited = None
+
+    def settle(reached: DataFrame, hop: int) -> DataFrame:
+        nonlocal visited
+        if visited is not None:
+            reached = visited.unionByName(reached).coalesce(1)
+        visited = (
+            reached.groupBy("seed", "id").agg(F.min("hops").alias("hops"))
+            .localCheckpoint(eager=False)
+        )
+        return visited.filter(F.col("hops") == hop)
+
+    def extend(joined: DataFrame, hop: int) -> DataFrame:
+        return joined.select("seed", F.col("_to").alias("id"), F.lit(hop).alias("hops"))
+
+    start = seeds.select("seed", "id", F.lit(0).alias("hops"))
+    _hop_rounds(start, _directed(edges, edge_type, direction), "id", max_hops, settle, extend)
+    return visited.filter(F.col("hops") >= 1)
 
 
 def forest_closure(
@@ -266,43 +280,38 @@ def enumerate_paths(
     (TraceDataFlow, query.go:245-285): per-path node arrays, cycle
     pruned via ``array_contains`` (SURVEY §7.3 risk 1).
 
-    Seed-anchored like :func:`bfs_reachable`, so the in-flight path set
-    is broadcast into each extension join (edges scanned in place).
+    Seed-anchored like :func:`bfs_reachable`: each round extends the
+    paths of the last hop by one edge (:func:`_hop_rounds`), keeping
+    each hop's paths as one checkpoint of their own, and the loop
+    halts at the first hop that extends no path.
 
     :returns: DataFrame ``(start, end, path array<string>, hops)``.
     """
-    e = _directed(edges, edge_type, direction)
-    cur = (
+    levels = []
+
+    def settle(paths: DataFrame, hop: int) -> DataFrame:
+        levels.append(paths)
+        return paths
+
+    def extend(joined: DataFrame, hop: int) -> DataFrame:
+        return joined.filter(~F.array_contains(F.col("path"), F.col("_to"))).select(
+            "start",
+            F.col("_to").alias("end"),
+            F.concat(F.col("path"), F.array(F.col("_to"))).alias("path"),
+            F.lit(hop).alias("hops"),
+        )
+
+    start = (
         sources.select(F.col("id").alias("start"))
         .distinct()
-        .withColumn("end", F.col("start"))
-        .withColumn("path", F.array(F.col("start")))
-        .withColumn("hops", F.lit(0))
+        .select(
+            "start",
+            F.col("start").alias("end"),
+            F.array(F.col("start")).alias("path"),
+            F.lit(0).alias("hops"),
+        )
     )
-    cur = cur.localCheckpoint(eager=True)
-    acc: DataFrame | None = None
-    with _tiny_shuffle(edges):
-        # Lazy checkpoints flatten each round's plan, with no per-round
-        # action; but path enumeration bounds are deep (15) while real
-        # path depth is usually shallow, so one periodic count every
-        # `check_every` rounds reclaims the early exit at 1/check_every
-        # the barrier cost.
-        check_every = 5
-        for hop in range(1, max_hops + 1):
-            cur = (
-                F.broadcast(cur).join(e, cur.end == e._from)
-                .filter(~F.array_contains(F.col("path"), F.col("_to")))
-                .select(
-                    "start",
-                    F.col("_to").alias("end"),
-                    F.concat(F.col("path"), F.array(F.col("_to"))).alias("path"),
-                    F.lit(hop).alias("hops"),
-                )
-            )
-            cur = cur.localCheckpoint(eager=False)
-            acc = cur if acc is None else acc.unionByName(cur)
-            if hop % check_every == 0 and hop < max_hops and cur.count() == 0:
-                break
-    if acc is None:
-        return cur.limit(0)
-    return acc.localCheckpoint(eager=False)
+    _hop_rounds(start, _directed(edges, edge_type, direction), "end", max_hops, settle, extend)
+    if len(levels) == 1:
+        return start.limit(0)
+    return reduce(DataFrame.unionByName, levels[1:])

@@ -492,9 +492,11 @@ def graph_harmonic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit.
 
     Scale shape: seeds are O(1) and the whole sample runs as ONE
-    tagged frontier (operators/traversal.bfs_multi_source — max_hops
-    rounds TOTAL, not per seed; edges scanned in place, never
-    shuffled), then seeds × nodes distance rows feed one id-keyed
+    tagged frontier (operators/traversal.bfs_multi_source — one round
+    per hop of the deepest seed plus one that reaches nothing, at most
+    max_hops + 1 in all, not per seed; each round broadcasts the
+    frontier into an in-place scan of the CALLS edges, never shuffled
+    them), then seeds × nodes distance rows feed one id-keyed
     agg. At 100 TB the sample size grows (ε⁻² log n seeds), not the
     per-seed cost — and no driver-side seed pull exists at all."""
     from codegraph_spark.operators.traversal import bfs_multi_source

@@ -425,7 +425,7 @@ def _kcore_peel(adj: DataFrame, k: int = _KCORE_K) -> tuple[DataFrame, int]:
             keep.withColumnRenamed("node", "nbr"), "nbr", "left_semi"
         )
 
-    return supersteps(adj, peel_round, witness=DataFrame.count)
+    return supersteps(adj, peel_round, witness=DataFrame.count)[:2]
 
 
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:

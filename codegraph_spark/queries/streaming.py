@@ -26,8 +26,8 @@ from codegraph_spark.streaming.incremental import (
 def stream_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, sf_dir)
     # state = one row per (hour, event_type) — bounded cardinality, so
-    # a few state-store partitions; see run_available_now docstring.
-    return run_available_now(hourly_counts(ev), output_mode="complete", state_partitions=8)
+    # a few state-store partitions; see incremental.STATE_PARTITIONS.
+    return run_available_now(hourly_counts(ev), output_mode="complete")
 
 
 def stream_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,9 +40,7 @@ def stream_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_events_stream(spark, sf_dir)
     # state = one row per (15-min-start window, event_type) — 4× the
     # tumbling cardinality, still bounded by the time range
-    return run_available_now(
-        hopping_counts(ev), output_mode="complete", state_partitions=8
-    )
+    return run_available_now(hopping_counts(ev), output_mode="complete")
 
 
 _STREAM_HOURLY_SQL = """
@@ -88,7 +86,6 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
         .withColumnRenamed("count", "cell"),
         output_mode="complete",
-        state_partitions=8,
     )
     return cms_topk_from_sketch(spark, sf_dir, sketch)
 
@@ -114,7 +111,6 @@ def stream_quantiles_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "cent")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c")),
         output_mode="complete",
-        state_partitions=8,
     )
     return quantiles_from_cent_hist(hist)
 
@@ -139,7 +135,6 @@ def stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "bucket")
         .agg(F.max("reg").alias("reg")),
         output_mode="complete",
-        state_partitions=8,
     )
     return hll_estimate_from_registers(spark, sf_dir, registers)
 
@@ -164,9 +159,7 @@ def stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codegraph_spark.streaming.incremental import streaming_kmv
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(
-        streaming_kmv(ev, _KMV_K), output_mode="update", state_partitions=8
-    )
+    out = run_available_now(streaming_kmv(ev, _KMV_K), output_mode="update")
     # final state row per key: n_kept only grows; at capacity hk only
     # shrinks — (max n_kept, min hk) IS the last update
     w = Window.partitionBy("event_type").orderBy(
@@ -206,9 +199,7 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     into micro-batches. State shards by user_id — the 1000-executor
     layout is the shuffle partitioning itself."""
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(
-        running_user_totals(ev), output_mode="update", state_partitions=8
-    )
+    out = run_available_now(running_user_totals(ev), output_mode="update")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         out.withColumn("rn", F.row_number().over(w))
@@ -242,7 +233,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", F.floor(F.col("value")).cast("bigint").alias("value_bucket")
     )
     deduped = keyed.dropDuplicates(["event_type", "value_bucket"])
-    return run_available_now(deduped, output_mode="append", state_partitions=8)
+    return run_available_now(deduped, output_mode="append")
 
 
 _STREAM_DEDUP_SQL = """
@@ -265,7 +256,6 @@ def stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_available_now(
         streaming_funnel(ev, ("view", "click", "purchase")),
         output_mode="update",
-        state_partitions=8,
     )
     per_user = out.groupBy("user_id").agg(F.max("reached").alias("reached"))
     # coalesce: sum over an EMPTY drain is NULL, but the funnel's
@@ -315,9 +305,7 @@ def stream_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codegraph_spark.streaming.incremental import streaming_asof
 
     ev = read_events_stream(spark, sf_dir)
-    return run_available_now(
-        streaming_asof(ev), output_mode="append", state_partitions=8
-    )
+    return run_available_now(streaming_asof(ev), output_mode="append")
 
 
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -341,7 +329,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("session_value"),
         )
     )
-    out = run_available_now(sess, output_mode="complete", state_partitions=8)
+    out = run_available_now(sess, output_mode="complete")
     return out.select(
         "user_id",
         F.unix_micros(F.col("session_window.start").cast("timestamp"))
@@ -390,9 +378,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     into micro-batches. Lag is reported in integer microseconds
     (engine-exact, no float hash surface)."""
     ev = read_events_stream(spark, sf_dir)
-    return run_available_now(
-        interval_join_views_clicks(ev), output_mode="append", state_partitions=8
-    )
+    return run_available_now(interval_join_views_clicks(ev), output_mode="append")
 
 
 def interval_join_views_clicks(
@@ -502,9 +488,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism, "doc_id"
     )
     banded = _banded_docs(docs)
-    out = run_available_now(
-        streaming_bucket_prior(banded), output_mode="update", state_partitions=8
-    )
+    out = run_available_now(streaming_bucket_prior(banded), output_mode="update")
     return (
         out.groupBy("doc_id")
         .agg(
@@ -545,7 +529,6 @@ def stream_dedup_minhash_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_available_now(
         streaming_bucket_prior_unordered(banded),
         output_mode="update",
-        state_partitions=8,
     )
     # rename the keys on the agg side: a self-join of an agg of the
     # same memory-sink view hits "Conflicting attributes" otherwise
@@ -644,7 +627,6 @@ def stream_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
         ).agg(F.count(F.lit(1)).cast("bigint").alias("x")),
         output_mode="complete",
-        state_partitions=8,
     )
     return cusum_from_hourly(hourly)
 
@@ -662,9 +644,7 @@ def stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from codegraph_spark.streaming.incremental import streaming_transitions
 
     ev = read_events_stream(spark, sf_dir)
-    out = run_available_now(
-        streaming_transitions(ev), output_mode="update", state_partitions=8
-    )
+    out = run_available_now(streaming_transitions(ev), output_mode="update")
     pairs = out.groupBy("from_type", "to_type").agg(
         F.sum("cnt").cast("bigint").alias("n_trans")
     )
@@ -701,7 +681,6 @@ def stream_transitions_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_available_now(
         streaming_transitions_buffered(stream, horizon_us),
         output_mode="update",
-        state_partitions=8,
     )
     pairs = out.groupBy("from_type", "to_type").agg(
         F.sum("cnt").cast("bigint").alias("n_trans")
@@ -871,9 +850,7 @@ def _url_dedup_drain(docs: DataFrame) -> DataFrame:
     agg = canon.groupBy("domain", "url_canon").agg(
         F.min("doc_id").alias("mk"), F.count(F.lit(1)).alias("cnt")
     )
-    drained = run_available_now(
-        agg, output_mode="update", state_partitions=8
-    )
+    drained = run_available_now(agg, output_mode="update")
     groups = drained.groupBy("domain", "url_canon").agg(
         F.min("mk").alias("keeper_id"), F.max("cnt").alias("n")
     )

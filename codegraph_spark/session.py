@@ -7,7 +7,8 @@ is correct on a real cluster:
 - shuffle partitions sized to cores locally (a cluster deployment would
   size to ``2-3 x total executor cores`` or rely on AQE coalescing);
 - UTC session timezone so timestamp semantics match the DuckDB oracle;
-- Arrow enabled for the few Pandas-UDF paths (ingestion parse stages).
+- Arrow enabled for the few Pandas-UDF paths (ingestion parse stages);
+- parquet TIMESTAMP(NANOS) (``events.ts``) read as its raw int64.
 
 Two more settings cut the fixed cost of every small serving call. Both
 are static: Spark rejects them on a running session, and PySpark reads
@@ -45,17 +46,15 @@ def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
 
 
-def get_spark(
-    app_name: str = "codegraph-spark",
-    cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(8, int(cpus))
-        except ValueError:
-            shuffle_partitions = 32
+def get_spark(app_name: str = "codegraph-spark", cpus: int | str | None = None) -> SparkSession:
+    """The engine's local session on ``cpus`` cores: by default
+    ``SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    if cpus is None:
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    try:
+        shuffle_partitions = max(8, int(cpus))
+    except ValueError:
+        shuffle_partitions = 32
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -65,6 +64,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -92,6 +92,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
         str(max(8, spark.sparkContext.defaultParallelism)),
     )
     conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # bound Arrow batch memory for wide (media/binary) rows — at
     # 100 TB a media batch of the default 10k rows can be gigabytes.
     conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")

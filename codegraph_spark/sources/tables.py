@@ -67,9 +67,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return hit[1]
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS) — Spark has no nanosecond
-        # timestamp type, so read the raw int64 and truncate to micros
-        # (integer division: a double cast would lose precision at 1e18).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # timestamp type, so the session reads the raw int64 (nanosAsLong,
+        # session.py) and this truncates it to micros (integer division:
+        # a double cast would lose precision at 1e18).
         df = spark.read.parquet(path)
         from pyspark.sql import functions as F
 

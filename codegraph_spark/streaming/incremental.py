@@ -88,7 +88,6 @@ def read_events_stream(
 ) -> DataFrame:
     """File-source stream over the events table (TIMESTAMP(NANOS)
     handled exactly like the batch loader — sources/tables.py)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = _read_table_stream(spark, sf_dir, "events", max_files_per_trigger)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
@@ -140,23 +139,25 @@ def hopping_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def run_available_now(
-    result: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
+#: state-store partitions of every drain: a streaming agg instantiates
+#: one state store per shuffle partition per micro-batch, so the count
+#: should track STATE volume (distinct group keys), not input volume —
+#: for the bounded rollups drained here (hours × event types) a handful
+#: of stores beats a core-sized session default by 2×+.
+STATE_PARTITIONS = 8
+
+
+def run_available_now(result: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drain all available input through the streaming query into a
     memory sink and return the result table (test/serving harness —
     production sinks are transactional tables).
 
-    ``state_partitions`` sizes the stateful-operator shuffle for this
-    drain (restored afterwards). A streaming agg instantiates one state
-    store per shuffle partition per micro-batch, so partition count
-    should track STATE volume (here: distinct group keys), not input
-    volume — for a bounded rollup (hours × event types) a handful of
-    stores beats the session default by 2×+. The partition count is
-    baked into a query's checkpoint, so this only applies to fresh
-    drains like this one.
+    The drain runs with :data:`STATE_PARTITIONS` shuffle partitions
+    and restores the session's value afterwards. Spark has no
+    per-query setting for this: a stateful query fixes its state
+    partition count from the session conf when it first starts (and
+    bakes it into its checkpoint), so the conf must hold while the
+    query starts, and only fresh drains like this one pick it up.
 
     Checkpoint placement (r12): an availableNow drain into a memory
     sink is EPHEMERAL by construction (fresh uuid checkpoint per
@@ -172,8 +173,7 @@ def run_available_now(
 
     spark = result.sparkSession
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     name = f"stream_{uuid.uuid4().hex[:12]}"
     root = spark.conf.get(
         "spark.codegraph.stream.drainCheckpointDir",

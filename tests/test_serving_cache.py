@@ -119,9 +119,10 @@ def test_active_dataset_with_old_entry_is_not_self_evicted(spark):
 def test_warm_views_restores_session_conf(spark, sf_dir):
     """The warehouse build must leave session-global planning conf
     exactly as it found it: a view build that sets shuffle partitions
-    or AQE (as _tiny_shuffle does for the lazy traversal loops) and
-    leaks it silently de-optimizes every subsequently compiled plan in
-    the session, and makes a concurrent view build unsafe."""
+    or AQE (no operator does; a one-partition round says so in its
+    plan) and leaks it silently de-optimizes every subsequently
+    compiled plan in the session, and makes a concurrent view build
+    unsafe."""
     from codegraph_spark.queries.traversals import warm_views
 
     keys = ["spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"]

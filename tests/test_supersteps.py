@@ -66,10 +66,25 @@ def test_fixed_rounds_without_witness(spark):
     def bump(df):
         return df.select((F.col("x") + 1).alias("x"))
 
-    out, n = supersteps(spark.range(1).select(F.lit(0).alias("x")), bump, rounds=4)
+    out, n, _ = supersteps(spark.range(1).select(F.lit(0).alias("x")), bump, rounds=4)
     assert (out.first()["x"], n) == (4, 4)
     with pytest.raises(ValueError):
         supersteps(out, bump)
+
+
+def test_start_witness_halts_after_one_round(spark):
+    """Given its input's witness value, a loop whose first round changes
+    nothing stops after that round (no second, confirming one) and
+    returns the value."""
+    from pyspark.sql import DataFrame
+
+    from codegraph_spark.operators.supersteps import supersteps
+
+    def same(df):
+        return df
+
+    _, n, w = supersteps(spark.range(3), same, witness=DataFrame.count, start_witness=3)
+    assert (n, w) == (1, 3)
 
 
 def test_transitive_closure_raises_instead_of_truncating(spark):
@@ -170,3 +185,70 @@ def test_transitive_closure_jobs(spark):
     edges = _chain(spark, 7)
     _, jobs = _jobs(spark, "closure-jobs", lambda: transitive_closure(edges).collect())
     assert jobs <= 28
+
+
+def _min_jobs(spark, group, fn, calls=3):
+    """(result, fewest Spark jobs over ``calls`` calls of ``fn``): the
+    job count of one call can vary between identical calls."""
+    runs = [_jobs(spark, f"{group}-{i}", fn) for i in range(calls)]
+    assert all(out == runs[0][0] for out, _ in runs)
+    return runs[0][0], min(jobs for _, jobs in runs)
+
+
+def _chain_traversals(spark):
+    """Multi-source BFS (seeds 0 and 1) and path enumeration (from 0)
+    on the 3-edge chain 0 → 1 → 2 → 3, as functions of ``max_hops``.
+    The frames are built in the JVM: a ``createDataFrame`` frame costs
+    a Python worker per partition on every scan."""
+    from codegraph_spark.operators.traversal import bfs_multi_source, enumerate_paths
+
+    edges = spark.range(3).select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+    seeds = spark.range(2).select(F.col("id").alias("seed"), "id")
+    sources = spark.range(1)
+
+    def bfs(max_hops):
+        return sorted(tuple(r) for r in bfs_multi_source(edges, seeds, max_hops).collect())
+
+    def paths(max_hops):
+        return sorted(
+            (r.start, r.end, tuple(r.path), r.hops)
+            for r in enumerate_paths(edges, sources, max_hops).collect()
+        )
+
+    return bfs, paths
+
+
+def test_seeded_traversals_halt_at_first_empty_round(spark):
+    """Both seed-anchored traversals stop at the first round that
+    reaches nothing: the same rows and the same jobs at max_hops 6 as
+    at 15 (the chain is 3 hops deep). Four rounds of two jobs (the
+    frontier broadcast and the count of the rows reached), the seeds'
+    dedupe and the caller's collect."""
+    bfs, paths = _chain_traversals(spark)
+    want = {
+        "bfs": [(0, 1, 1), (0, 2, 2), (0, 3, 3), (1, 2, 1), (1, 3, 2)],
+        "paths": [(0, 1, (0, 1), 1), (0, 2, (0, 1, 2), 2), (0, 3, (0, 1, 2, 3), 3)],
+    }
+    for name, run in (("bfs", bfs), ("paths", paths)):
+        got6, jobs6 = _min_jobs(spark, f"{name}-6", lambda: run(6))
+        got15, jobs15 = _min_jobs(spark, f"{name}-15", lambda: run(15))
+        assert got6 == got15 == want[name]
+        assert jobs6 == jobs15 <= 10, (name, jobs6, jobs15)
+
+
+def test_seeded_traversals_leave_session_conf_alone(spark, monkeypatch):
+    """Neither seed-anchored traversal sets a session conf: the shared
+    session's shuffle width and AQE stay what its owner made them."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    keys = []
+    real_set = RuntimeConfig.set
+
+    def spy(self, key, value):
+        keys.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    bfs, paths = _chain_traversals(spark)
+    assert bfs(6) and paths(6)
+    assert keys == []

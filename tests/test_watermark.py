@@ -56,11 +56,7 @@ def test_late_event_is_dropped(spark, staged_dir):
         .option("recursiveFileLookup", "true")
         .parquet(staged_dir)
     )
-    out = run_available_now(
-        hourly_counts(stream, watermark="1 hour"),
-        output_mode="append",
-        state_partitions=2,
-    )
+    out = run_available_now(hourly_counts(stream, watermark="1 hour"), output_mode="append")
     rows = {r["hour"]: (r["n"], r["total_value"]) for r in out.collect()}
     # the 00:00 window closed with only the on-time event — the late
     # 100.0-value event must not have re-opened or re-entered it

@@ -46,7 +46,6 @@ def main() -> None:
         from codegraph_spark.session import get_spark
 
         spark = get_spark(app_name="bench-sf1-build", cpus="16")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         build_scaled(spark)
         spark.stop()
 

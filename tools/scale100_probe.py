@@ -74,7 +74,6 @@ def main() -> None:
     spark = get_spark(
         app_name="scale100-probe", cpus=os.environ.get("SPARK_GRAFT_CPUS", "16")
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # reuse SCALE.md's replica builder verbatim at 100 replicas — same
     # marker-interleave / sign-flip / key-offset perturbations, so
     # near-dup and bucket densities match the original corpus

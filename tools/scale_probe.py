@@ -602,7 +602,6 @@ def main() -> None:
     from codegraph_spark.session import get_spark
 
     spark = get_spark(app_name="scale-probe", cpus=os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     build_scaled(spark)
 
     import __spark_entry__ as e
