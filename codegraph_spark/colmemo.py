@@ -1,4 +1,4 @@
-"""Session-lifetime memo for deterministic Column-tree builders (r12).
+"""Bounded memo for deterministic Column-tree builders (r12).
 
 A PySpark ``Column`` is an immutable, unresolved expression fragment
 that resolves by NAME at analysis time, so the same tree can be reused
@@ -8,11 +8,12 @@ however, pays one py4j round trip per expression node — measured
 and the bench/driver invoke each query function afresh per pass, so
 that construction cost recurs per invocation.
 
-``memo_cols`` caches a builder's output when every argument is a plain
-column NAME (str); the wrapped builder converts names to ``F.col``
-itself. Calls that pass composite ``Column`` arguments build fresh, so
-semantics never depend on the cache. Nothing here touches data — this
-is pure expression-object reuse.
+``memo_cols`` caches a builder's output, for its 64 most recently used
+argument tuples, when every argument is a plain column NAME (str); the
+wrapped builder converts names to ``F.col`` itself. Calls that pass
+composite ``Column`` arguments build fresh, so semantics never depend
+on the cache. Nothing here touches data — this is pure
+expression-object reuse.
 """
 
 from __future__ import annotations
@@ -23,13 +24,15 @@ from collections.abc import Callable
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from codegraph_spark.lru import LRU
+
 
 def memo_cols(build: Callable) -> Callable:
     """Memoize ``build(*cols)`` by argument names. Accepts str or
     Column arguments: str args are converted to ``F.col`` and the
     result is cached under the name tuple; any Column argument makes
     the call build fresh (uncached)."""
-    cache: dict = {}
+    cache = LRU(64)
 
     @functools.wraps(build)
     def cached(*args):
@@ -38,11 +41,7 @@ def memo_cols(build: Callable) -> Callable:
             # ADVICE): a builder must never receive a raw str where a
             # pyspark function would interpret it as a literal
             return build(*(F.col(a) if isinstance(a, str) else a for a in args))
-        hit = cache.get(args)
-        if hit is None:
-            hit = build(*(F.col(a) for a in args))
-            cache[args] = hit
-        return hit
+        return cache.get(args, lambda: build(*(F.col(a) for a in args)))
 
     return cached
 

@@ -42,14 +42,9 @@ class PropertyGraph:
         return cls(spark.read.parquet(nodes_path), spark.read.parquet(edges_path))
 
     @classmethod
-    def from_tpch_recast(
-        cls, spark: SparkSession, sf_dir: str, cached: bool = True
-    ) -> "PropertyGraph":
-        from codegraph_spark.sources.recast import graph_edges, graph_nodes
-
-        if not cached:
-            return cls(graph_nodes(spark, sf_dir), graph_edges(spark, sf_dir))
+    def from_tpch_recast(cls, spark: SparkSession, sf_dir: str) -> "PropertyGraph":
         from codegraph_spark.serving import shared_obj
+        from codegraph_spark.sources.recast import graph_edges, graph_nodes
 
         def build() -> "PropertyGraph":
             # Compact before persisting: the nodes/edges plans are unions

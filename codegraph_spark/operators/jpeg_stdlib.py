@@ -36,6 +36,8 @@ from __future__ import annotations
 
 import struct
 
+from codegraph_spark.lru import LRU
+
 # ---------------------------------------------------------------------------
 # Shared tables
 # ---------------------------------------------------------------------------
@@ -115,16 +117,9 @@ def _dct_matrix():
     return _DCT_M
 
 
-_CANON_CACHE: dict[tuple, dict] = {}
-
-
 def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """T.81 Annex C canonical code assignment:
-    symbol -> (code, length). Cached per table content."""
-    ck = (tuple(bits), tuple(vals))
-    cached = _CANON_CACHE.get(ck)
-    if cached is not None:
-        return cached
+    symbol -> (code, length)."""
     out: dict[int, tuple[int, int]] = {}
     code = 0
     k = 0
@@ -134,22 +129,21 @@ def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, i
             code += 1
             k += 1
         code <<= 1
-    _CANON_CACHE[ck] = out
     return out
 
 
-_QT_CACHE: dict[int, list[int]] = {}
+_DC_CODES = _canonical_codes(_DC_LUM_BITS, _DC_LUM_VALS)
+_AC_CODES = _canonical_codes(_AC_LUM_BITS, _AC_LUM_VALS)
+
+#: clamped quality -> scaled table; qualities clamp to 1..100
+_QTABLES = LRU(100)
 
 
 def _quality_table(quality: int) -> list[int]:
     """IJG quality scaling of the Annex K luminance table (cached)."""
     q = max(1, min(100, int(quality)))
-    t = _QT_CACHE.get(q)
-    if t is None:
-        scale = 5000 // q if q < 50 else 200 - 2 * q
-        t = [max(1, min(255, (b * scale + 50) // 100)) for b in _Q_LUM]
-        _QT_CACHE[q] = t
-    return t
+    scale = 5000 // q if q < 50 else 200 - 2 * q
+    return _QTABLES.get(q, lambda: [max(1, min(255, (b * scale + 50) // 100)) for b in _Q_LUM])
 
 
 # ---------------------------------------------------------------------------
@@ -243,26 +237,21 @@ def _encode_block(w: _BitWriter, row, pred: int, dc_codes, ac_codes) -> int:
     return dc
 
 
-_CODE_ARR_CACHE: dict[tuple, tuple] = {}
+#: "dc" / "ac" -> the standard tables' code arrays, built on first use
+_CODE_ARRAYS = LRU(2)
 
 
-def _codes_arrays(bits: list[int], vals: list[int]):
+def _codes_arrays(codes: dict[int, tuple[int, int]]):
     """Canonical codes as 256-entry (code, length) int64 arrays for the
-    vectorized entropy encoder (cached per table content)."""
+    vectorized entropy encoder."""
     import numpy as np
 
-    ck = (tuple(bits), tuple(vals))
-    hit = _CODE_ARR_CACHE.get(ck)
-    if hit is None:
-        codes = _canonical_codes(bits, vals)
-        code_arr = np.zeros(256, dtype=np.int64)
-        len_arr = np.zeros(256, dtype=np.int64)
-        for sym, (code, ln) in codes.items():
-            code_arr[sym] = code
-            len_arr[sym] = ln
-        hit = (code_arr, len_arr)
-        _CODE_ARR_CACHE[ck] = hit
-    return hit
+    code_arr = np.zeros(256, dtype=np.int64)
+    len_arr = np.zeros(256, dtype=np.int64)
+    for sym, (code, ln) in codes.items():
+        code_arr[sym] = code
+        len_arr[sym] = ln
+    return code_arr, len_arr
 
 
 def _encode_entropy_gray(zz, restart_interval: int) -> bytes:
@@ -277,8 +266,8 @@ def _encode_entropy_gray(zz, restart_interval: int) -> bytes:
     the loop form (pinned by tests against the reference encoder)."""
     import numpy as np
 
-    dc_code, dc_len = _codes_arrays(_DC_LUM_BITS, _DC_LUM_VALS)
-    ac_code, ac_len = _codes_arrays(_AC_LUM_BITS, _AC_LUM_VALS)
+    dc_code, dc_len = _CODE_ARRAYS.get("dc", lambda: _codes_arrays(_DC_CODES))
+    ac_code, ac_len = _CODE_ARRAYS.get("ac", lambda: _codes_arrays(_AC_CODES))
     nb = len(zz)
     ri = int(restart_interval)
     seg_of_block = (np.arange(nb) // ri) if ri else np.zeros(nb, dtype=np.int64)
@@ -465,8 +454,7 @@ def encode_jpeg_ycbcr420(
     _, c_bw, cb_zz = _plane_zigzag_blocks(cb, quality)
     _, _, cr_zz = _plane_zigzag_blocks(cr, quality)
 
-    dc_codes = _canonical_codes(_DC_LUM_BITS, _DC_LUM_VALS)
-    ac_codes = _canonical_codes(_AC_LUM_BITS, _AC_LUM_VALS)
+    dc_codes, ac_codes = _DC_CODES, _AC_CODES
     w = _BitWriter()
     preds = [0, 0, 0]
     for m in range(mcux * mcuy):
@@ -580,39 +568,37 @@ def _split_scan_segments(data: bytes, pos: int) -> list[bytes]:
     return [s.replace(b"\xff\x00", b"\xff") for s in segments]
 
 
-#: 16-bit-prefix Huffman LUTs, cached per RAW DHT spec bytes (r13 — the
-#: previous cache rebuilt the (length, code)→symbol dict and sorted
-#: ~176 items per FRAME to form its key; identical DHT segments across
-#: a corpus now hash ~180 bytes instead). Values are plain Python
-#: lists: the decode loop indexes them with Python ints, and list
-#: indexing avoids the per-lookup numpy-scalar boxing.
-_HUFF_LUT_CACHE: dict[bytes, list] = {}
+#: 16-bit-prefix Huffman LUTs, cached per RAW DHT spec bytes, so
+#: identical DHT segments across a corpus hash ~180 bytes instead of
+#: rebuilding a table per frame. Values are plain Python lists: the
+#: decode loop indexes them with Python ints, and list indexing avoids
+#: the per-lookup numpy-scalar boxing. Each entry holds ~2.45 MiB and
+#: the keys come from input files, hence the bound.
+_HUFF_LUTS = LRU(16)
 
 
 def _huff_lut_raw(raw: bytes) -> list:
     """Raw DHT table spec (class/id byte + 16 BITS counts + HUFFVAL)
     -> 65536-entry list: lut[16-bit peek] = (symbol << 5) | code_length,
     0 = invalid (T.81 Annex C canonical assignment)."""
+    return _HUFF_LUTS.get(raw, lambda: _huff_lut(raw[1:17], raw[17:]))
+
+
+def _huff_lut(bits: bytes, vals: bytes) -> list:
     import numpy as np
 
-    lut = _HUFF_LUT_CACHE.get(raw)
-    if lut is None:
-        bits = raw[1:17]
-        vals = raw[17:]
-        arr = np.zeros(1 << 16, dtype=np.int32)
-        code = 0
-        k = 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                lo = code << (16 - length)
-                hi = (code + 1) << (16 - length)
-                arr[lo:hi] = (vals[k] << 5) | length
-                code += 1
-                k += 1
-            code <<= 1
-        lut = arr.tolist()
-        _HUFF_LUT_CACHE[raw] = lut
-    return lut
+    arr = np.zeros(1 << 16, dtype=np.int32)
+    code = 0
+    k = 0
+    for length in range(1, 17):
+        for _ in range(bits[length - 1]):
+            lo = code << (16 - length)
+            hi = (code + 1) << (16 - length)
+            arr[lo:hi] = (vals[k] << 5) | length
+            code += 1
+            k += 1
+        code <<= 1
+    return arr.tolist()
 
 
 def _segment_windows(segment: bytes) -> tuple[list, int]:

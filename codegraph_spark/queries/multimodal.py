@@ -994,9 +994,9 @@ def _stored_media_scan(spark: SparkSession, root: str, modality: str):
     (~0.15 s at sf0.1's ~3.6k files). The fixture root is
     content-addressed (md5 of the documents fingerprint in the PATH),
     so the cached plan can never go stale — changed source data yields
-    a different root/key. Plan only, no rows cached (the
-    sources/tables.py ``_PLAN_CACHE`` class of memo, on serving.py's
-    invalidation/eviction contract)."""
+    a different root/key. Plan only, no rows cached, like
+    ``load_table``'s plans, but held in serving.py's dataset LRU and so
+    dropped by its ``invalidate``."""
     from codegraph_spark.serving import shared_obj
     from codegraph_spark.sources.media import read_media_dir
 

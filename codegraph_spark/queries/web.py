@@ -740,9 +740,9 @@ def _fixture_scan(spark: SparkSession, root: str, name: str, build):
     pass). The fixture root embeds its source-content fingerprint in
     the PATH (md5 tag — see :func:`_warc_fixture_dir`), so the cached
     plan can never go stale: changed source data yields a different
-    root and therefore a different key. Plan only, no rows cached —
-    the sources/tables.py ``_PLAN_CACHE`` class of memo, with
-    serving.py's invalidation/eviction contract."""
+    root and therefore a different key. Plan only, no rows cached,
+    like ``load_table``'s plans, but held in serving.py's dataset LRU
+    and so dropped by its ``invalidate``."""
     from codegraph_spark.serving import shared_obj
 
     return shared_obj(spark, (root, "fixture_scan", name), build)

@@ -17,34 +17,33 @@ Every write path that rewrites a dataset dir in-session must call
 ``invalidate(dir)``.
 
 Bounded by construction AND by eviction: a handful of named entries
-per dataset dir, and at most ``_MAX_DATASETS`` dataset dirs retained
-per application (least-recently-used dir evicted wholesale, with its
-DataFrames unpersisted) — a long-lived serving session cycling many
-dataset dirs no longer accumulates persisted blocks until executor
-memory evicts them (r5 ADVICE). Repeated query invocations REUSE one
-cached copy instead of stacking a fresh ``.persist()`` per call (the
-leak class r4's ADVICE flagged).
+per dataset dir, and one :class:`~codegraph_spark.lru.LRU` of
+(applicationId, dataset_dir) groups holding at most ``_MAX_DATASETS``
+of them. The least recently used group is evicted wholesale, its
+DataFrames unpersisted, so a long-lived serving session cycling many
+dataset dirs does not accumulate persisted blocks until executor
+memory evicts them. Repeated query invocations REUSE one cached copy
+instead of stacking a fresh ``.persist()`` per call.
 """
 
 from __future__ import annotations
 
-from collections import OrderedDict
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: (applicationId, dataset_dir, *name) -> persisted DataFrame (or a
-#: plain derived object via :func:`shared_obj`), in LRU order of the
-#: owning (applicationId, dataset_dir) group
-_CACHE: OrderedDict[tuple, object] = OrderedDict()
+from codegraph_spark.lru import LRU
 
 
-def _drop(value: object) -> None:
-    """Release a cache entry: DataFrames are unpersisted; plain
-    objects (packed bitsets, codebooks) just drop their reference."""
-    up = getattr(value, "unpersist", None)
-    if callable(up):
-        up()
+def _drop(_group_key: tuple, group: dict) -> int:
+    """Release a group's entries: DataFrames are unpersisted; plain
+    objects (packed bitsets, codebooks) just drop their reference.
+    Returns the number of entries released."""
+    for value in group.values():
+        up = getattr(value, "unpersist", None)
+        if callable(up):
+            up()
+    return len(group)
 
 
 #: retained dataset dirs per application; a serving deployment pins one
@@ -52,31 +51,9 @@ def _drop(value: object) -> None:
 #: where caching has no reuse to exploit anyway
 _MAX_DATASETS = 4
 
-
-def _dataset_of(key: tuple) -> tuple:
-    """(applicationId, dataset_dir) — the eviction granularity. Every
-    caller passes the dataset dir as key[0] of its user key."""
-    return key[:2]
-
-
-def _touch_dataset(ds: tuple) -> None:
-    for k in list(_CACHE):
-        if _dataset_of(k) == ds:
-            _CACHE.move_to_end(k)
-
-
-def _evict_lru_datasets() -> None:
-    while True:
-        order: list[tuple] = []
-        for k in _CACHE:  # first occurrence order = LRU order of groups
-            ds = _dataset_of(k)
-            if ds not in order:
-                order.append(ds)
-        if len(order) <= _MAX_DATASETS:
-            return
-        victim = order[0]
-        for k in [k for k in _CACHE if _dataset_of(k) == victim]:
-            _drop(_CACHE.pop(k))
+#: (applicationId, dataset_dir) -> {name: persisted DataFrame or plain
+#: derived object}; every caller passes the dataset dir as key[0]
+_GROUPS = LRU(_MAX_DATASETS, on_evict=_drop)
 
 
 def shared_df(
@@ -90,21 +67,14 @@ def shared_df(
     ``eager`` materializes at build time so the cost is paid exactly
     once and any builder-local scaffolding can be torn down before the
     handle escapes."""
-    k = (spark.sparkContext.applicationId,) + key
-    df = _CACHE.get(k)
-    if df is None:
+
+    def persisted() -> DataFrame:
         df = build().persist()
         if eager:
             df.count()
-        _CACHE[k] = df
-    # touch BEFORE evicting: group LRU rank comes from first-occurrence
-    # order, so an old entry of the dataset being served would otherwise
-    # rank it least-recent and evict the DataFrame just built/returned
-    # (the active dataset would then thrash on every call while idle
-    # datasets stayed cached)
-    _touch_dataset(_dataset_of(k))
-    _evict_lru_datasets()
-    return df
+        return df
+
+    return shared_obj(spark, key, persisted)
 
 
 def shared_obj(
@@ -112,20 +82,18 @@ def shared_obj(
     key: tuple,
     build: Callable[[], object],
 ) -> object:
-    """Memoized PLAIN-OBJECT twin of :func:`shared_df` for small
-    driver-side derived structures (a packed Bloom bitset, a trained
-    codebook) that are per-dataset state, not DataFrames. Same keying,
-    same group-LRU eviction, and — the point (r7 ADVICE) — same
-    :func:`invalidate` contract: a writer rewriting the dataset dir
-    drops these alongside the persisted DataFrames, so no private
-    module-level dict can serve a stale structure."""
-    k = (spark.sparkContext.applicationId,) + key
-    if k not in _CACHE:
-        _CACHE[k] = build()
-    obj = _CACHE[k]
-    _touch_dataset(_dataset_of(k))
-    _evict_lru_datasets()
-    return obj
+    """Memoized object keyed by (applicationId, *key): a persisted
+    DataFrame through :func:`shared_df`, or a small driver-side derived
+    structure (a packed Bloom bitset, a trained codebook) that is
+    per-dataset state. Same keying, same group LRU and same
+    :func:`invalidate` contract for both: a writer rewriting the
+    dataset dir drops these alongside the persisted DataFrames, so no
+    private module-level dict can serve a stale structure."""
+    group = _GROUPS.get((spark.sparkContext.applicationId, key[0]), dict)
+    name = key[1:]
+    if name not in group:
+        group[name] = build()
+    return group[name]
 
 
 def invalidate(dataset_dir: str) -> int:
@@ -133,15 +101,10 @@ def invalidate(dataset_dir: str) -> int:
     ``dataset_dir``, across applications. Call from any write path
     that rewrites a dataset dir within a live session. Returns the
     number of entries dropped."""
-    victims = [k for k in _CACHE if len(k) > 1 and k[1] == dataset_dir]
-    for k in victims:
-        _drop(_CACHE.pop(k))
-    return len(victims)
+    victims = [k for k in _GROUPS.entries if k[1] == dataset_dir]
+    return sum(_drop(k, _GROUPS.pop(k)) for k in victims)
 
 
 def clear() -> int:
     """Unpersist and drop every cached entry (test teardown hook)."""
-    n = len(_CACHE)
-    for k in list(_CACHE):
-        _drop(_CACHE.pop(k))
-    return n
+    return sum(_drop(k, _GROUPS.pop(k)) for k in list(_GROUPS.entries))

@@ -31,12 +31,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from codegraph_spark.lru import LRU
 
-#: (applicationId, path, mtime_ns, size) → parquet schema. Each drain
-#: otherwise re-reads the file footer to infer the stream schema
-#: (~50-90 ms per query invocation — the r12 load_table finding, on
-#: the streaming door). Schema only; stamp-keyed like _PLAN_CACHE.
-_STREAM_SCHEMA_CACHE: dict[tuple, object] = {}
+
+#: (applicationId, path) → parquet schema, stamped (mtime_ns, size).
+#: Each drain otherwise re-reads the file footer to infer the stream
+#: schema, 50-90 ms per query invocation.
+_SCHEMAS = LRU(256)
 
 
 def _read_table_stream(
@@ -55,21 +56,13 @@ def _read_table_stream(
     path = os.path.join(sf_dir, f"{table}.parquet")
     try:
         st = os.stat(path)
-        key = (
-            spark.sparkContext.applicationId,
-            path,
-            st.st_mtime_ns,
-            st.st_size,
+        schema = _SCHEMAS.get(
+            (spark.sparkContext.applicationId, path),
+            lambda: spark.read.parquet(path).schema,
+            (st.st_mtime_ns, st.st_size),
         )
     except OSError:
-        key = None
-    schema = _STREAM_SCHEMA_CACHE.get(key) if key else None
-    if schema is None:
         schema = spark.read.parquet(path).schema
-        if key:
-            if len(_STREAM_SCHEMA_CACHE) > 256:
-                _STREAM_SCHEMA_CACHE.clear()
-            _STREAM_SCHEMA_CACHE[key] = schema
     reader = spark.readStream.schema(schema)
     if os.path.isdir(path):
         stream_path = path

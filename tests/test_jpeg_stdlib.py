@@ -261,3 +261,33 @@ def test_bitreader_partial_final_symbol_still_decodes():
         data = encode_jpeg_gray(px, 24, 24, quality=q)
         w, h, out = decode_jpeg_gray(data)
         assert (w, h) == (24, 24)
+
+
+def test_huffman_lut_memory_is_bounded_for_distinct_input_tables():
+    """The decoder memoizes one ~2.45 MiB lookup table per distinct DHT
+    segment, and DHT bytes come from input files: 40 distinct AC tables
+    must not keep 40 tables alive (an unbounded memo grows by ~98 MiB
+    here; the bound keeps at most 16)."""
+    import random
+    import tracemalloc
+
+    from codegraph_spark.operators import jpeg_stdlib as J
+
+    rng = random.Random(7)
+    specs = []
+    for _ in range(40):
+        vals = list(J._AC_LUM_VALS)
+        rng.shuffle(vals)
+        specs.append(bytes([0x10]) + bytes(J._AC_LUM_BITS) + bytes(vals))
+    assert len(set(specs)) == 40
+    tracemalloc.start()
+    try:
+        before = tracemalloc.get_traced_memory()[0]
+        for raw in specs:
+            lut = J._huff_lut_raw(raw)
+            assert len(lut) == 1 << 16
+        del lut
+        grown = tracemalloc.get_traced_memory()[0] - before
+    finally:
+        tracemalloc.stop()
+    assert grown < 20 * 2.45 * 2**20, f"{grown / 2**20:.1f} MiB retained"

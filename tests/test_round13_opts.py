@@ -25,17 +25,17 @@ def test_plan_cache_evicts_stale_stamp_on_rewrite(spark, tmp_path):
     src.coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "region.parquet"))
     tables.load_table(spark, d, "region")
     key = (spark.sparkContext.applicationId, os.path.abspath(d), "region")
-    stamp1 = tables._PLAN_CACHE[key][0]
+    stamp1 = tables._PLANS.entries[key][0]
     # rewrite with different content size so the stamp must change
     spark.range(50).selectExpr(
         "id", "repeat(cast(id as string), 7) AS name"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(d, "region.parquet"))
     df2 = tables.load_table(spark, d, "region")
     assert df2.count() == 50  # fresh plan, not the stale 5-row one
-    stamp2 = tables._PLAN_CACHE[key][0]
+    stamp2 = tables._PLANS.entries[key][0]
     assert stamp2 != stamp1
     # exactly ONE entry for the key: the stale stamp was evicted
-    assert sum(1 for k in tables._PLAN_CACHE if k == key) == 1
+    assert sum(1 for k in tables._PLANS.entries if k == key) == 1
 
 
 def test_plan_cache_lru_cap(spark, tmp_path):
@@ -45,26 +45,26 @@ def test_plan_cache_lru_cap(spark, tmp_path):
 
     src = spark.range(3).selectExpr("id", "cast(id as string) AS name")
     n_dirs = 6
-    old_max = tables._PLAN_CACHE_MAX
-    tables._PLAN_CACHE_MAX = 4
+    old_max = tables._PLANS.maxsize
+    tables._PLANS.maxsize = 4
     try:
-        tables._PLAN_CACHE.clear()
+        tables._PLANS.entries.clear()
         for i in range(n_dirs):
             d = str(tmp_path / f"ds{i}")
             src.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(d, "region.parquet")
             )
             tables.load_table(spark, d, "region")
-        assert len(tables._PLAN_CACHE) <= 4
+        assert len(tables._PLANS.entries) <= 4
         # the most recent dir survived
         key = (
             spark.sparkContext.applicationId,
             os.path.abspath(str(tmp_path / f"ds{n_dirs - 1}")),
             "region",
         )
-        assert key in tables._PLAN_CACHE
+        assert key in tables._PLANS.entries
     finally:
-        tables._PLAN_CACHE_MAX = old_max
+        tables._PLANS.maxsize = old_max
 
 
 def test_spread_cache_lru_cap(spark):
@@ -72,16 +72,16 @@ def test_spread_cache_lru_cap(spark):
     DataFrame objects per call) cannot pin DataFrames without bound."""
     from codegraph_spark.sources import tables
 
-    old_max = tables._SPREAD_CACHE_MAX
-    tables._SPREAD_CACHE_MAX = 8
+    old_max = tables._SPREADS.maxsize
+    tables._SPREADS.maxsize = 8
     try:
-        tables._SPREAD_CACHE.clear()
+        tables._SPREADS.entries.clear()
         frames = [spark.range(3).selectExpr("id AS doc_id") for _ in range(20)]
         for f in frames:
             tables.spread(f, "doc_id")
-        assert len(tables._SPREAD_CACHE) <= 8
+        assert len(tables._SPREADS.entries) <= 8
     finally:
-        tables._SPREAD_CACHE_MAX = old_max
+        tables._SPREADS.maxsize = old_max
 
 
 # --- sources/media.py modality glob pushdown (r13, guide §6) -----------------

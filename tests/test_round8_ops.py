@@ -76,14 +76,22 @@ def test_bloom_bitset_dropped_by_serving_invalidate(spark):
     text_contamination_bloom(spark, TEST_SF_DIR)
     app = spark.sparkContext.applicationId
     key = (app, TEST_SF_DIR, "contamination_bloom_bitset")
-    assert key in serving._CACHE
-    packed = serving._CACHE[key]
+
+    def entries() -> dict:
+        return {
+            g + name: v
+            for g, (_, group) in serving._GROUPS.entries.items()
+            for name, v in group.items()
+        }
+
+    assert key in entries()
+    packed = entries()[key]
     assert isinstance(packed, list) and len(packed) == 1024  # 2^16 bits / 64
     assert serving.invalidate(TEST_SF_DIR) >= 1
-    assert key not in serving._CACHE
+    assert key not in entries()
     # rebuild on next call reproduces the identical filter
     text_contamination_bloom(spark, TEST_SF_DIR)
-    assert serving._CACHE[key] == packed
+    assert entries()[key] == packed
 
 
 def test_buffered_transitions_raises_when_disorder_exceeds_horizon(

@@ -33,7 +33,8 @@ def test_shared_df_key_isolation(spark):
 
 
 def _entries() -> list[tuple]:
-    return list(serving._CACHE)
+    """Every cached key as (applicationId, dataset_dir, *name)."""
+    return [g + name for g, (_, group) in serving._GROUPS.entries.items() for name in group]
 
 
 def test_lru_evicts_oldest_dataset_and_unpersists(spark):
@@ -104,13 +105,13 @@ def test_active_dataset_with_old_entry_is_not_self_evicted(spark):
         serving.shared_df(spark, (f"/fake/act-{i}", "a"), lambda i=i: spark.range(500 + i))
     # a SECOND entry for D must keep D (and both its entries) cached
     df = serving.shared_df(spark, ("/fake/act-D", "b"), lambda: spark.range(450))
-    live = {k[1] for k in serving._CACHE}
+    live = {k[1] for k in _entries()}
     assert "/fake/act-D" in live
     assert df.storageLevel.useMemory
-    assert sum(1 for k in serving._CACHE if k[1] == "/fake/act-D") == 2
+    assert sum(1 for k in _entries() if k[1] == "/fake/act-D") == 2
     # the victim is the oldest OTHER dataset... none evicted yet (4 groups)
     serving.shared_df(spark, ("/fake/act-new", "a"), lambda: spark.range(600))
-    live = {k[1] for k in serving._CACHE}
+    live = {k[1] for k in _entries()}
     assert "/fake/act-D" in live          # D stayed (recently touched)
     assert "/fake/act-0" not in live      # true LRU evicted
     serving.clear()
