@@ -34,10 +34,14 @@ def _chain(spark, n, k=0):
 
 
 def test_session_is_built_for_small_calls(spark):
-    """get_spark fixes the two static confs; PySpark's per-call call-site
-    capture is off in this session."""
+    """get_spark fixes the three static confs; PySpark's per-call call-site
+    capture is off in this session, and its Python workers run the
+    engine's zip-cache invalidation while the driver keeps the stock one."""
+    import zipimport
+
     from pyspark.errors.utils import is_debugging_enabled
 
+    from codegraph_spark import pydaemon
     from codegraph_spark.session import CODEGEN_CACHE_ENTRIES
 
     conf = spark.sparkContext.getConf()
@@ -45,6 +49,20 @@ def test_session_is_built_for_small_calls(spark):
     assert CODEGEN_CACHE_ENTRIES > 100
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
+    assert conf.get("spark.python.daemon.module") == "codegraph_spark.pydaemon"
+
+    def probe(batches):
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"m": [zipimport.zipimporter.invalidate_caches.__module__]})
+
+    rows = spark.range(1, numPartitions=1).mapInPandas(probe, "m string").collect()
+    assert [r.m for r in rows] == [pydaemon.__name__]
+    assert zipimport.zipimporter.invalidate_caches is pydaemon._stock_invalidate_caches
 
 
 def test_warm_round_compiles_no_new_class(spark):
