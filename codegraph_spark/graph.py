@@ -33,8 +33,9 @@ class PropertyGraph:
                 raise ValueError(f"edges missing required column {c!r}")
         self.nodes = nodes
         self.edges = edges
-        self._closures: dict[tuple[str, int], DataFrame] = {}
-        self._typed_edges: dict[str, DataFrame] = {}
+        # every persisted structure derived from the graph, by key (see
+        # cached_view)
+        self._cache: dict[object, DataFrame] = {}
 
     # ---- construction ----------------------------------------------------
     @classmethod
@@ -79,8 +80,7 @@ class PropertyGraph:
     def unpersist(self) -> None:
         """Release the cached blocks of both tables and of every
         structure memoized on the graph (closures, typed edges, views)."""
-        for df in [self.nodes, self.edges, *self._closures.values(),
-                   *self._typed_edges.values()]:
+        for df in [self.nodes, self.edges, *self._cache.values()]:
             df.unpersist()
 
     def write_parquet(self, nodes_path: str, edges_path: str, mode: str = "overwrite") -> None:
@@ -125,19 +125,16 @@ class PropertyGraph:
         every ``[:CONTAINS*]`` pattern (query.go:126, :292). Built once
         per (edge_type, depth) and persisted; J2/J6-style traversals are
         then single equi-joins instead of iterative BFS rounds."""
-        key = (edge_type, max_depth)
-        clo = self._closures.get(key)
-        if clo is None:
+        def build() -> DataFrame:
             from codegraph_spark.operators.traversal import forest_closure
 
             p = self.edges.sparkSession.sparkContext.defaultParallelism
-            clo = (
+            return (
                 forest_closure(self.edges, max_depth, edge_type=edge_type)
                 .repartition(p)  # union-of-levels plan → compact task count
-                .persist()
             )
-            self._closures[key] = clo
-        return clo
+
+        return self.cached_view((edge_type, max_depth), build)
 
     def closure_from(
         self,
@@ -158,17 +155,15 @@ class PropertyGraph:
         node count. Slicing once and persisting makes each subsequent
         lookup scan only the service-rooted rows (the on-disk analog is
         partitioning the closure table by anc label at ingest)."""
-        key = (edge_type, max_depth, anc_prefix, hops_leq)
-        clo = self._closures.get(key)
-        if clo is None:
+        def build() -> DataFrame:
             clo = self.closure(edge_type, max_depth).filter(
                 F.col("anc").startswith(anc_prefix)
             )
             if hops_leq is not None:
                 clo = clo.filter(F.col("hops") <= hops_leq)
-            clo = clo.persist()
-            self._closures[key] = clo
-        return clo
+            return clo
+
+        return self.cached_view((edge_type, max_depth, anc_prefix, hops_leq), build)
 
     def warm_serving_caches(
         self,
@@ -245,18 +240,19 @@ class PropertyGraph:
                 for fut in [ex.submit(b) for b in builds]:
                     fut.result()  # surface the first failure, wait for all
 
-    def cached_view(self, name: str, build) -> DataFrame:
-        """Named materialized view on the graph: built once by
-        ``build()``, persisted, served warm thereafter — the in-memory
-        analog of an ingest-time denormalized table (what Neo4j's
-        BTREE/relationship indexes amortize for the reference; at 100 TB
-        the on-disk form is a parquet table refreshed with the graph).
-        Use for hot join chains that every call re-derives otherwise."""
-        key = ("__view__", name)
-        view = self._closures.get(key)
+    def cached_view(self, key, build) -> DataFrame:
+        """Materialized view on the graph under a hashable ``key``: built
+        once by ``build()``, persisted, served warm thereafter — the
+        in-memory analog of an ingest-time denormalized table (what
+        Neo4j's BTREE/relationship indexes amortize for the reference;
+        at 100 TB the on-disk form is a parquet table refreshed with the
+        graph). Every derived structure of the graph (closures, slices,
+        typed edges, label subsets, the trigram index) is one of these;
+        query modules key theirs ``("__view__", name)``."""
+        view = self._cache.get(key)
         if view is None:
             view = build().persist()
-            self._closures[key] = view
+            self._cache[key] = view
         return view
 
     def trigram_index(self, fields: tuple[str, ...] = ("name", "symbol")) -> DataFrame:
@@ -265,19 +261,16 @@ class PropertyGraph:
         first use and persisted, so indexed search serves from the warm
         table with no build stage on the query path (the ingest-time
         analog is ``write_index``/parquet alongside the graph tables)."""
-        key = ("__trigram__",) + tuple(fields)
-        idx = self._closures.get(key)
-        if idx is None:
+        def build() -> DataFrame:
             from codegraph_spark.operators.inverted_index import build_trigram_index
 
             p = self.nodes.sparkSession.sparkContext.defaultParallelism
-            idx = (
+            return (
                 build_trigram_index(self.nodes, fields=list(fields))
                 .repartition(p, "gram")  # gram-hash layout = pruned lookups
-                .persist()
             )
-            self._closures[key] = idx
-        return idx
+
+        return self.cached_view(("__trigram__",) + tuple(fields), build)
 
     def typed_edges(self, edge_type: str) -> DataFrame:
         """Cached per-type edge subset — the Spark analog of Neo4j's
@@ -287,20 +280,18 @@ class PropertyGraph:
         type's rows instead of re-filtering the full edge table. At
         scale this is the ``partitionBy("type")`` layout of
         :meth:`write_parquet` kept hot in memory."""
-        te = self._typed_edges.get(edge_type)
-        if te is None:
+        def build() -> DataFrame:
             p = self.edges.sparkSession.sparkContext.defaultParallelism
             # hash-partition on src: iterative traversals probe by src
             # every round, and a known HashPartitioning lets Catalyst
             # skip the exchange if a round ever shuffle-joins. A type
             # subset is ≪ the full edge table, so fewer partitions.
-            te = (
+            return (
                 self.edges.filter(F.col("type") == edge_type)
                 .repartition(max(4, p // 4), F.col("src"))
-                .persist()
             )
-            self._typed_edges[edge_type] = te
-        return te
+
+        return self.cached_view(edge_type, build)
 
     # ---- primitive lookups (reference: pkg/neo4j/query.go) ---------------
     def by_label(self, label: str, limit: int = 0, cached: bool = False) -> DataFrame:
@@ -310,15 +301,10 @@ class PropertyGraph:
         in-memory analog of the ``partitionBy("label")`` disk layout
         (same pattern as :meth:`typed_edges`); use it on hot serving
         paths that re-touch one label per call."""
-        if cached:
-            key = ("__label__", label)
-            sub = self._closures.get(key)
-            if sub is None:
-                sub = self.nodes.filter(F.col("label") == label).persist()
-                self._closures[key] = sub
-            out = sub
-        else:
-            out = self.nodes.filter(F.col("label") == label)
+        def subset() -> DataFrame:
+            return self.nodes.filter(F.col("label") == label)
+
+        out = self.cached_view(("__label__", label), subset) if cached else subset()
         return out.limit(limit) if limit > 0 else out
 
     def by_property(self, label: str, prop: str, value) -> DataFrame:

@@ -210,8 +210,10 @@ def _expand_rep_pairs(
     return cross.unionByName(intra)
 
 
-_SHINGLES_CTE = """
-shingles AS (
+def _shingles_cte(src: str) -> str:
+    """The oracle's ``shingles`` CTE (distinct 3-word shingles per doc)
+    over the ``(doc_id, text)`` rows of table ``src``."""
+    return f"""shingles AS (
     SELECT DISTINCT doc_id, w || ' ' || w2 || ' ' || w3 AS shingle
     FROM (
         SELECT doc_id, w,
@@ -221,16 +223,18 @@ shingles AS (
             SELECT doc_id,
                    unnest(string_split(text, ' ')) AS w,
                    generate_subscripts(string_split(text, ' '), 1) AS pos
-            FROM documents
+            FROM {src}
         )
     ) WHERE w3 IS NOT NULL
-)
-"""
+)"""
 
 
-def _shingle_hash_spark() -> F.Column:
+_SHINGLES_CTE = _shingles_cte("documents")
+
+
+def _shingle_hash_spark(s: Column | str = "shingle") -> Column:
     # md5-hex → int64 (15 hex digits < 2^60) → mod P; identical in SQL.
-    return F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10).cast("bigint") % _P
+    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint") % _P
 
 
 _SHINGLE_HASH_SQL = f"CAST(('0x' || substr(md5(shingle), 1, 15)) AS BIGINT) % {_P}"
@@ -389,24 +393,28 @@ WHERE CAST(shared AS DOUBLE) / (ca.n + cb.n - shared) >= 0.5
 
 
 # --- dedup_minhash_lsh: MinHash signatures + banded LSH candidates ------------
+#
+# One definition of each MinHash part, shared by batch, incremental and
+# streaming dedup (their answers agree only while they compute the same
+# sketch): the shingle hash (:func:`_shingle_hash_spark`), a ROW-LOCAL
+# signature for callers that cannot group rows without state
+# (:func:`minhash_mins_column`), a GROUPED signature over exploded
+# shingle postings (:func:`_sig_of`), one band key
+# (:func:`band_structs_from_mins`) fed by both, and one oracle CTE chain
+# (:func:`_minhash_ctes`).
 @memo_cols
 def minhash_mins_column() -> Column:
-    """``array<bigint>`` of all 16 signature minima in ONE pass over
-    the shingle hashes: ``aggregate`` folds each shingle's md5-derived
-    hash into a 16-slot accumulator via ``zip_with`` + ``least`` — the
-    md5 is evaluated once per shingle TOTAL, where 16 separate
-    ``array_min(transform(hs, ...))`` trees re-derive it 16 times
-    (Catalyst inlines the shared ``hs`` subtree into every consumer;
-    measured 5x wall on the streaming intake path). Arithmetic is
-    bit-identical to :func:`minhash_band_structs`: min over shingles
-    of (a·h + b) mod P per permutation; a zero-shingle doc keeps the
-    NULL init so downstream band keys NULL-propagate exactly as
-    before."""
-    sh = _shingle_array()
-    hs = F.transform(
-        sh,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint") % _P,
-    )
+    """Row-local ``array<bigint>`` of all 16 signature minima of the
+    ``text`` column's shingles, min over shingles of (a·h + b) mod P
+    per permutation, in ONE pass over the shingle hashes: ``aggregate``
+    folds each shingle's hash into a 16-slot accumulator via
+    ``zip_with`` + ``least`` — the md5 is evaluated once per shingle
+    TOTAL, where 16 separate ``array_min(transform(hs, ...))`` trees
+    re-derive it 16 times (Catalyst inlines the shared ``hs`` subtree
+    into every consumer; measured 5x wall on the streaming intake
+    path). A zero-shingle doc keeps the NULL init, so its band keys
+    NULL-propagate (the grouped signature has no row for it)."""
+    hs = F.transform(_shingle_array(), _shingle_hash_spark)
     ab = F.array(
         *[
             F.struct(
@@ -427,13 +435,27 @@ def minhash_mins_column() -> Column:
     )
 
 
+def _sig_of(shingles: DataFrame) -> DataFrame:
+    """(doc_id, mins): the grouped signature of (doc_id, shingle)
+    postings — the same 16 minima as :func:`minhash_mins_column`, one
+    map-side-combining groupBy. ``mins`` is ONE jvm-parsed expression
+    (r12: the column DSL costs ~8 py4j round trips per component)."""
+    mins = ", ".join(f"min(({a} * h + {b}) % {_P})" for a, b in _AB)
+    return (
+        shingles.withColumn("h", _shingle_hash_spark())
+        .groupBy("doc_id")
+        .agg(F.expr(f"array({mins})").alias("mins"))
+    )
+
+
 @memo_cols
 def band_structs_from_mins(mins: Column) -> Column:
-    """The 4 LSH band structs from a MATERIALIZED 16-min signature
-    array (pair with :func:`minhash_mins_column` behind a Generate
-    barrier so the signature is computed once — see
-    queries/streaming.stream_dedup_minhash). Same NULL-propagating
-    band-key construction as :func:`minhash_band_structs`."""
+    """The 4 LSH band structs ``(band, key)`` of a 16-min signature
+    array: key = md5 over the band's ':'-joined components. The concat
+    is NULL-PROPAGATING (not concat_ws, which skips NULLs): a
+    zero-shingle doc's all-NULL row-local signature yields NULL keys,
+    where concat_ws would band every short doc under one md5 and flag
+    them as duplicates of each other."""
     rows_per_band = len(_AB) // _BANDS
     bands = []
     for bidx in range(_BANDS):
@@ -455,98 +477,29 @@ def band_structs_from_mins(mins: Column) -> Column:
     return F.array(*bands)
 
 
-@memo_cols
-def minhash_band_structs() -> F.Column:
-    """``array<struct<band:int, key:string>>`` — the full MinHash→LSH
-    banding computed ROW-LOCALLY over ``text`` (shingle array → per-
-    shingle hash → 16 array_min signatures → 4 band keys), no explode,
-    no shuffle, no state. Identical arithmetic to the batch signature
-    (:func:`_minhash_sig` min-aggregates the same (a·h+b) mod P over
-    the same distinct shingles), which is what lets the STREAMING
-    intake dedup (queries/streaming.stream_dedup_minhash) band each
-    arriving document statelessly and still hash-match the batch
-    oracle bit for bit."""
-    sh = _shingle_array()
-    hs = F.transform(
-        sh,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint") % _P,
-    )
-    mh = [
-        F.array_min(F.transform(hs, lambda x: (F.lit(a) * x + F.lit(b)) % _P))
-        for a, b in _AB
-    ]
-    rows_per_band = len(_AB) // _BANDS
-    bands = []
-    for bidx in range(_BANDS):
-        members = [
-            mh[i].cast("string")
-            for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)
-        ]
-        # NULL-PROPAGATING concat (not concat_ws, which skips NULLs):
-        # a doc with zero shingles has NULL signature components and
-        # must yield a NULL key — concat_ws would quietly band every
-        # short doc under md5('') and flag them as duplicates of each
-        # other, where the batch oracle excludes them entirely
-        parts: list[F.Column] = []
-        for m in members:
-            if parts:
-                parts.append(F.lit(":"))
-            parts.append(m)
-        bands.append(
-            F.struct(
-                F.lit(bidx).cast("int").alias("band"),
-                F.md5(F.concat(*parts)).alias("key"),
-            )
-        )
-    return F.array(*bands)
+def _banded(signed: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, band, key): four rows per row of ``signed``, whose
+    ``mins`` column must be MATERIALIZED (an aggregate output, or the
+    output of a Generate barrier as in streaming._banded_docs) so the
+    four band reads do not each re-evaluate the signature. Keys of a
+    zero-shingle row-local signature are NULL."""
+    return signed.select(
+        *keep, F.explode(band_structs_from_mins("mins")).alias("bk")
+    ).select(*keep, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
 def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mh0..mh15): 16-component MinHash signatures of clique
-    REPRESENTATIVES — serving-cached because both the LSH dedup query
-    and the estimator audit (and the audit's three sig references)
-    read it; one map-side-combining groupBy over the cached rep
-    shingles. THE single signature definition: dedup_minhash_lsh and
-    dedup_minhash_est share the band cache keyed on this table, so a
-    drifted duplicate would silently poison whichever query ran
-    second (round-6 review finding)."""
+    """(doc_id, mins): signatures of clique REPRESENTATIVES —
+    serving-cached because both the LSH dedup query and the estimator
+    audit (and the audit's three sig references) read it; one
+    map-side-combining groupBy over the cached rep shingles.
+    dedup_minhash_lsh and dedup_minhash_est share the band cache keyed
+    on this table."""
     from codegraph_spark.serving import shared_df
 
-    def build() -> DataFrame:
-        sh = _rep_shingles(spark, sf_dir).withColumn("h", _shingle_hash_spark())
-        # jvm-parsed agg exprs (r12): the column-DSL formulation costs
-        # ~8 py4j round trips per component per call
-        return sh.groupBy("doc_id").agg(
-            *[
-                F.expr(f"min(({a} * h + {b}) % {_P}) AS mh{i}")
-                for i, (a, b) in enumerate(_AB)
-            ]
-        )
-
-    return shared_df(spark, (sf_dir, "dedup_minhash_sig"), build)
-
-
-def _bands_of_sig(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, key) from a (doc_id, mh0..mh15) signature table —
-    THE band-key definition (md5 over ':'-joined row components),
-    shared by the corpus-wide LSH index and the incremental-snapshot
-    store so the two can never drift."""
-    rows_per_band = len(_AB) // _BANDS
-    # ONE jvm-parsed expression (r12): building the 4 band structs via
-    # the column DSL costs ~10 py4j round trips per struct member per
-    # call; the equivalent SQL string parses in a single call
-    band_exprs = []
-    for bidx in range(_BANDS):
-        members = ", ".join(
-            f"CAST(mh{i} AS STRING)"
-            for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)
-        )
-        band_exprs.append(
-            f"struct({bidx} AS band, md5(concat_ws(':', {members})) AS key)"
-        )
-    bk = F.expr("explode(array(" + ", ".join(band_exprs) + "))")
-    return sig.select("doc_id", bk.alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    return shared_df(
+        spark, (sf_dir, "dedup_minhash_sig"),
+        lambda: _sig_of(_rep_shingles(spark, sf_dir)),
     )
 
 
@@ -559,7 +512,7 @@ def _minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return shared_df(
         spark, (sf_dir, "dedup_minhash_bands"),
-        lambda: _bands_of_sig(_minhash_sig(spark, sf_dir)),
+        lambda: _banded(_minhash_sig(spark, sf_dir), "doc_id"),
     )
 
 
@@ -600,9 +553,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _expand_rep_pairs(rep_pairs, intra, cl)
 
 
-def _minhash_sql() -> str:
+def _minhash_ctes(src: str = "documents", h: str = "h") -> str:
+    """The oracle's MinHash CTE chain over the ``(doc_id, text)`` rows
+    of table ``src``: ``shingles`` → ``hashed`` (shingle hash column
+    ``h``) → ``sig`` (doc_id, mh0..mh15) → ``banded`` (doc_id, band,
+    key)."""
     mh = ",\n           ".join(
-        f"min(({a} * h + {b}) % {_P}) AS mh{i}" for i, (a, b) in enumerate(_AB)
+        f"min(({a} * {h} + {b}) % {_P}) AS mh{i}" for i, (a, b) in enumerate(_AB)
     )
     rows_per_band = len(_AB) // _BANDS
     band_selects = []
@@ -615,10 +572,9 @@ def _minhash_sql() -> str:
             f"SELECT doc_id, {bidx} AS band, md5({concat}) AS key FROM sig"
         )
     bands = "\n    UNION ALL\n    ".join(band_selects)
-    return f"""
-WITH {_SHINGLES_CTE.strip()},
+    return f"""{_shingles_cte(src)},
 hashed AS (
-    SELECT doc_id, {_SHINGLE_HASH_SQL} AS h FROM shingles
+    SELECT doc_id, {_SHINGLE_HASH_SQL} AS {h} FROM shingles
 ),
 sig AS (
     SELECT doc_id,
@@ -627,7 +583,12 @@ sig AS (
 ),
 banded AS (
     {bands}
-)
+)"""
+
+
+def _minhash_sql() -> str:
+    return f"""
+WITH {_minhash_ctes()}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_bands
 FROM banded a JOIN banded b
   ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
@@ -664,18 +625,9 @@ def dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_bands"))
     )
-    sig_a = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(len(_AB))],
-    )
-    sig_b = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(len(_AB))],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(len(_AB))
-    )
+    sig_a = sig.select(F.col("doc_id").alias("doc_a"), F.col("mins").alias("ma"))
+    sig_b = sig.select(F.col("doc_id").alias("doc_b"), F.col("mins").alias("mb"))
+    matches = F.size(F.filter(F.zip_with("ma", "mb", lambda x, y: x == y), lambda e: e))
     counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         pairs.select("doc_a", "doc_b")
@@ -708,20 +660,6 @@ def dedup_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_est_sql() -> str:
-    mh = ",\n           ".join(
-        f"min(({a} * h + {b}) % {_P}) AS mh{i}" for i, (a, b) in enumerate(_AB)
-    )
-    rows_per_band = len(_AB) // _BANDS
-    band_selects = []
-    for bidx in range(_BANDS):
-        concat = " || ':' || ".join(
-            f"CAST(mh{i} AS VARCHAR)"
-            for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)
-        )
-        band_selects.append(
-            f"SELECT doc_id, {bidx} AS band, md5({concat}) AS key FROM sig"
-        )
-    bands = "\n    UNION ALL\n    ".join(band_selects)
     match_sum = " + ".join(
         f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END"
         for i in range(len(_AB))
@@ -734,31 +672,7 @@ WITH reps AS (
 rdocs AS (
     SELECT d.doc_id, d.text FROM documents d JOIN reps r ON r.doc_id = d.doc_id
 ),
-shingles AS (
-    SELECT DISTINCT doc_id, w || ' ' || w2 || ' ' || w3 AS shingle
-    FROM (
-        SELECT doc_id, w,
-               lead(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS w2,
-               lead(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w3
-        FROM (
-            SELECT doc_id,
-                   unnest(string_split(text, ' ')) AS w,
-                   generate_subscripts(string_split(text, ' '), 1) AS pos
-            FROM rdocs
-        )
-    ) WHERE w3 IS NOT NULL
-),
-hashed AS (
-    SELECT doc_id, {_SHINGLE_HASH_SQL} AS h FROM shingles
-),
-sig AS (
-    SELECT doc_id,
-           {mh}
-    FROM hashed GROUP BY doc_id
-),
-banded AS (
-    {bands}
-),
+{_minhash_ctes("rdocs")},
 cand AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_bands
     FROM banded a JOIN banded b
@@ -2121,9 +2035,8 @@ ORDER BY source
 #
 #   exact_prior — content hash already in the snapshot store;
 #   near_prior  — no exact hit, but ≥1 LSH band key collides with a
-#                 DIFFERENT prior clique (same 16-minhash/4-band
-#                 machinery as dedup_minhash_lsh, _bands_of_sig — one
-#                 definition, no drift);
+#                 DIFFERENT prior clique (the grouped signature
+#                 _sig_of and band key of dedup_minhash_lsh);
 #   batch_dup   — clean vs the snapshot, but an exact copy of an
 #                 earlier doc in the SAME batch (first-seen-wins);
 #   new         — admitted; the per-source hashsum pins exactly which.
@@ -2191,26 +2104,16 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # re-ran the scan+union+md5+groupBy FOUR times (72 parquet
         # scans total, 16 jobs). This is the snapshot hash store the
         # operator models, materialized once per refresh (guide §2.4).
-    ).localCheckpoint(eager=False)
+        # Eager: a lazy checkpoint that concurrent AQE stages compute
+        # first can deadlock the scheduler (the rule supersteps keeps).
+    ).localCheckpoint(eager=True)
     reps = d.select("doc_id", "text").join(
         gh.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi"
     )
-    sig = (
-        _shingles_of(reps)
-        .withColumn("hs", _shingle_hash_spark())
-        .groupBy("doc_id")
-        # jvm-parsed agg exprs (r12): one py4j call per component
-        .agg(
-            *[
-                F.expr(f"min(({a} * hs + {b}) % {_P}) AS mh{i}")
-                for i, (a, b) in enumerate(_AB)
-            ]
-        )
-    )
-    # materialize the banded store once (r13): two consumers
-    # (prior_bands, near_reps) otherwise each re-run the shingle
-    # explode + 16-component MinHash aggregation (guide §2.4)
-    banded = _bands_of_sig(sig).localCheckpoint(eager=False)
+    # materialize the banded store once (r13), eagerly as gh: two
+    # consumers (prior_bands, near_reps) otherwise each re-run the
+    # shingle explode + 16-component MinHash aggregation (guide §2.4)
+    banded = _banded(_sig_of(_shingles_of(reps)), "doc_id").localCheckpoint(eager=True)
     prior_reps = gh.filter(F.col("n_prior") > 0).select(
         F.col("rep_id").alias("doc_id")
     )
@@ -2280,20 +2183,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _incremental_sql() -> str:
-    mh = ",\n           ".join(
-        f"min(({a} * hs + {b}) % {_P}) AS mh{i}" for i, (a, b) in enumerate(_AB)
-    )
-    rows_per_band = len(_AB) // _BANDS
-    band_selects = []
-    for bidx in range(_BANDS):
-        concat = " || ':' || ".join(
-            f"CAST(mh{i} AS VARCHAR)"
-            for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)
-        )
-        band_selects.append(
-            f"SELECT doc_id, {bidx} AS band, md5({concat}) AS key FROM sig"
-        )
-    bands = "\n    UNION ALL\n    ".join(band_selects)
     return f"""
 WITH d AS (
     SELECT doc_id, source, text, md5(text) AS h,
@@ -2318,31 +2207,7 @@ reps AS (
     SELECT d.doc_id, d.text FROM d
     WHERE d.doc_id IN (SELECT rep_id FROM gh)
 ),
-shingles AS (
-    SELECT DISTINCT doc_id, w || ' ' || w2 || ' ' || w3 AS shingle
-    FROM (
-        SELECT doc_id, w,
-               lead(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS w2,
-               lead(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS w3
-        FROM (
-            SELECT doc_id,
-                   unnest(string_split(text, ' ')) AS w,
-                   generate_subscripts(string_split(text, ' '), 1) AS pos
-            FROM reps
-        )
-    ) WHERE w3 IS NOT NULL
-),
-hashed AS (
-    SELECT doc_id, {_SHINGLE_HASH_SQL} AS hs FROM shingles
-),
-sig AS (
-    SELECT doc_id,
-           {mh}
-    FROM hashed GROUP BY doc_id
-),
-banded AS (
-    {bands}
-),
+{_minhash_ctes("reps", "hs")},
 prior_bands AS (
     SELECT DISTINCT band, key FROM banded
     WHERE doc_id IN (SELECT rep_id FROM gh WHERE n_prior > 0)

@@ -436,36 +436,30 @@ def _asof_oracle() -> str:
     return _ASOF_SQL
 
 
-def _banded_docs(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, key) banding of a documents stream with ONE
+def _banded_docs(docs: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, band, key) banding of a documents stream with ONE
     signature evaluation per document. Two Generate barriers defeat
     projection collapse (which would inline the 64-permutation
     expression into every consumer — measured 5x re-evaluation):
-    (1) explode a 1-element array of the single-pass 16-min signature
+    (1) explode a 1-element array of the row-local signature
     (dedup.minhash_mins_column — md5 once per shingle), so the
     signature is MATERIALIZED per row; (2) explode the 4 band structs
-    derived from the materialized array, then filter NULL keys
-    per-row (zero-shingle docs NULL-propagate on every band, matching
-    the batch oracle's shingles CTE exclusion). Measured at sf0.1:
-    21.7 s -> ~2 s for the full intake drain."""
-    from codegraph_spark.queries.dedup import band_structs_from_mins, minhash_mins_column
+    derived from the materialized array (dedup._banded). Zero-shingle
+    docs get NULL keys on every band, which never equi-join and which
+    callers filter where the batch oracle's shingles CTE excludes the
+    doc. Measured at sf0.1: 21.7 s -> ~2 s for the full intake drain."""
+    from codegraph_spark.queries.dedup import _banded, minhash_mins_column
 
-    m = docs.select(
-        "doc_id", F.explode(F.array(minhash_mins_column())).alias("mins")
-    )
-    return (
-        m.select("doc_id", F.explode(band_structs_from_mins("mins")).alias("bk"))
-        .filter(F.col("bk.key").isNotNull())
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    )
+    m = docs.select(*keep, F.explode(F.array(minhash_mins_column())).alias("mins"))
+    return _banded(m, *keep)
 
 
 def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup dedup AT THE INGEST DOOR — the production shape of
     MinHash dedup (batch dedup_minhash_lsh sweeps history; intake has
     to decide per ARRIVING document): each streamed document is banded
-    statelessly (dedup.minhash_band_structs — the identical row-local
-    signature arithmetic), and custom stateful operator #6
+    statelessly (:func:`_banded_docs` — the row-local signature with
+    the batch band key), and custom stateful operator #6
     (streaming/incremental.streaming_bucket_prior, one int64 of state
     per LSH bucket) reports the earliest prior member of each of its
     4 band buckets. A document is an intake duplicate when ANY band
@@ -473,7 +467,6 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdicts hash-match the batch min-smaller-id-per-bucket oracle,
     proving the incremental index equals the batch index however the
     input splits into micro-batches."""
-    from codegraph_spark.queries.dedup import minhash_band_structs
     from codegraph_spark.streaming.incremental import (
         read_documents_stream,
         streaming_bucket_prior,
@@ -487,7 +480,7 @@ def stream_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_documents_stream(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    banded = _banded_docs(docs)
+    banded = _banded_docs(docs, "doc_id").filter(F.col("key").isNotNull())
     out = run_available_now(streaming_bucket_prior(banded), output_mode="update")
     return (
         out.groupBy("doc_id")
@@ -516,7 +509,6 @@ def stream_dedup_minhash_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     drain: prior(doc) = final bucket min when it undercuts doc. Same
     batch oracle as stream_dedup_minhash: a hash match proves the
     reordered stream converges to the identical answer."""
-    from codegraph_spark.queries.dedup import minhash_band_structs
     from codegraph_spark.streaming.incremental import (
         read_documents_stream_shuffled,
         streaming_bucket_prior_unordered,
@@ -525,7 +517,7 @@ def stream_dedup_minhash_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_documents_stream_shuffled(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    banded = _banded_docs(docs)
+    banded = _banded_docs(docs, "doc_id").filter(F.col("key").isNotNull())
     out = run_available_now(
         streaming_bucket_prior_unordered(banded),
         output_mode="update",
@@ -557,41 +549,10 @@ def stream_dedup_minhash_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_minhash_dedup_sql() -> str:
-    from codegraph_spark.queries.dedup import (
-        _AB,
-        _BANDS,
-        _P,
-        _SHINGLE_HASH_SQL,
-        _SHINGLES_CTE,
-    )
+    from codegraph_spark.queries.dedup import _minhash_ctes
 
-    mh = ",\n           ".join(
-        f"min(({a} * h + {b}) % {_P}) AS mh{i}" for i, (a, b) in enumerate(_AB)
-    )
-    rows_per_band = len(_AB) // _BANDS
-    band_selects = []
-    for bidx in range(_BANDS):
-        concat = " || ':' || ".join(
-            f"CAST(mh{i} AS VARCHAR)"
-            for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)
-        )
-        band_selects.append(
-            f"SELECT doc_id, {bidx} AS band, md5({concat}) AS key FROM sig"
-        )
-    bands = "\n    UNION ALL\n    ".join(band_selects)
     return f"""
-WITH {_SHINGLES_CTE.strip()},
-hashed AS (
-    SELECT doc_id, {_SHINGLE_HASH_SQL} AS h FROM shingles
-),
-sig AS (
-    SELECT doc_id,
-           {mh}
-    FROM hashed GROUP BY doc_id
-),
-banded AS (
-    {bands}
-),
+WITH {_minhash_ctes()},
 hits AS (
     SELECT b.doc_id, b.band, min(a.doc_id) AS prior
     FROM banded b
@@ -970,13 +931,13 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     decides its prior-dup status with two stream-static joins and NO
     state store at all:
 
-    - the per-doc MinHash signature is a PURE ARRAY EXPRESSION
-      (array_min over the hashed shingle array, 16 components) — the
-      same 3-word shingle set and band-key md5 as the batch machinery,
-      so stream and batch signatures are bit-identical per text;
-    - docs with < 3 words get an EMPTY band array (the batch side has
-      no signature row for them), so a null-key can never
-      false-match another shingle-less doc;
+    - the per-doc MinHash signature is the row-local one
+      (:func:`_banded_docs`): the same 3-word shingle set, minima and
+      band key as the batch machinery, so stream and batch band keys
+      are bit-identical per text;
+    - docs with < 3 words get NULL band keys (the batch side has no
+      signature row for them), which never match in the band join, so
+      a shingle-less doc can never false-match another;
     - the crawl-overlap replay (%7 refetches, %11 in-batch mirrors)
       happens in-stream via a per-row instance explode, so the door
       sees exactly the batch's incoming multiset however the input
@@ -1003,12 +964,9 @@ def _incremental_door(
     document stream (split out so the multi-batch shuffled-stream test
     can inject read_documents_stream_shuffled)."""
     from codegraph_spark.queries.dedup import (
-        _AB,
-        _BANDS,
         _INC_MIRROR_OFF,
         _INC_REFETCH_OFF,
         _P,
-        _shingle_array,
     )
     from codegraph_spark.sources.tables import load_table
 
@@ -1020,58 +978,6 @@ def _incremental_door(
         .distinct()
     )
 
-    def _mins_col() -> F.Column:
-        """All 16 MinHash components in ONE traversal of the hashed
-        shingle array: F.aggregate folds a 16-element running-min
-        accumulator, zip_with'd against the constant (a, b) pairs. The
-        obvious 16 x array_min(transform(...)) formulation rebuilds
-        the shingle + md5 chain PER COMPONENT (measured ~5x the whole
-        drain); here the hash chain evaluates once per row. Values lie
-        in [0, P), so init = P is the identity. Empty shingle arrays
-        keep the init accumulator and are masked by the size guard in
-        _band_arr (batch side has no signature row for them)."""
-        hs = F.transform(
-            _shingle_array(),
-            lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10)
-            .cast("bigint") % _P,
-        )
-        ab = F.array(
-            *[
-                F.struct(
-                    F.lit(a).cast("bigint").alias("a"),
-                    F.lit(b).cast("bigint").alias("b"),
-                )
-                for a, b in _AB
-            ]
-        )
-        return F.aggregate(
-            hs,
-            F.array_repeat(F.lit(_P).cast("bigint"), len(_AB)),
-            lambda acc, h: F.zip_with(
-                acc, ab, lambda x, p: F.least(x, (p["a"] * h + p["b"]) % _P)
-            ),
-        )
-
-    def _band_arr() -> F.Column:
-        rows_per_band = len(_AB) // _BANDS
-        cols = []
-        for bidx in range(_BANDS):
-            members = [
-                F.element_at("mins", i + 1).cast("string")
-                for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)
-            ]
-            cols.append(
-                F.struct(
-                    F.lit(bidx).alias("band"),
-                    F.md5(F.concat_ws(":", *members)).alias("key"),
-                )
-            )
-        # < 3 words -> no shingles -> no signature batch-side: emit an
-        # EMPTY band array, not keys folded from the init accumulator
-        return F.when(
-            F.col("has_sig"), F.array(*cols)
-        ).otherwise(F.array().cast("array<struct<band:int,key:string>>"))
-
     # serving-cached like every store-shaped structure: in production
     # these ARE persisted tables the prior crawl wrote — rebuilding
     # them per drain would misprice the door's steady-state cost
@@ -1079,14 +985,10 @@ def _incremental_door(
 
     prior_bands = shared_df(
         spark, (sf_dir, "inc_prior_bands"),
-        lambda: prior_texts.select(
-            _mins_col().alias("mins"),
-            (F.size(_shingle_array()) > 0).alias("has_sig"),
-        )
-        .filter("has_sig")
-        .select(F.explode(_band_arr()).alias("bk"))
-        .select(F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-        .distinct(),
+        lambda: _banded_docs(prior_texts)
+        .filter(F.col("key").isNotNull())
+        .distinct()
+        .withColumn("bhit", F.lit(1)),
     )
     prior_h = shared_df(
         spark, (sf_dir, "inc_prior_h"),
@@ -1121,27 +1023,17 @@ def _incremental_door(
     ).select(
         "source", "text", F.explode(inst).alias("doc_id")
     )
-    signed = arriving.select(
-        "source", "doc_id",
-        F.md5("text").alias("h"),
-        _mins_col().alias("mins"),
-        (F.size(_shingle_array()) > 0).alias("has_sig"),
-    ).select(
-        "source", "doc_id", "h",
-        F.explode_outer(_band_arr()).alias("bk"),
+    # a zero-shingle doc's NULL band keys join nothing: bhit 0
+    signed = _banded_docs(
+        arriving.withColumn("h", F.md5("text")), "source", "doc_id", "h"
     )
     dec = (
         signed.join(F.broadcast(prior_h), "h", "left")
-        .join(
-            F.broadcast(prior_bands),
-            (F.col("bk.band") == F.col("band"))
-            & (F.col("bk.key") == F.col("key")),
-            "left",
-        )
+        .join(F.broadcast(prior_bands), ["band", "key"], "left")
         .select(
             "source", "doc_id", "h",
             F.coalesce("exactf", F.lit(0)).alias("exactf"),
-            F.when(F.col("band").isNotNull(), 1).otherwise(0).alias("bhit"),
+            F.coalesce("bhit", F.lit(0)).alias("bhit"),
         )
     )
     drained = run_available_now(dec, output_mode="append")

@@ -50,7 +50,7 @@ def j4_impact_view(g: PropertyGraph) -> DataFrame:
     so a vanilla serving session pays the 10 sequential supersteps
     once, not per query."""
     return g.cached_view(
-        "j4_impact_bfs",
+        ("__view__", "j4_impact_bfs"),
         lambda: bfs_reachable(
             g.typed_edges("CALLS"), _j4_seeds(g), max_hops=10
         ).select("id", "hops"),
@@ -263,7 +263,7 @@ def member_symbols_view(g: PropertyGraph) -> DataFrame:
             .select("callee_id", "symbol")
         )
 
-    return g.cached_view("member_symbols", build)
+    return g.cached_view(("__view__", "member_symbols"), build)
 
 
 def warm_views(spark: SparkSession, sf_dir: str) -> None:
@@ -337,7 +337,7 @@ def j6_deps_view(g: PropertyGraph) -> DataFrame:
             .distinct()
         )
 
-    return g.cached_view("j6_deps", build)
+    return g.cached_view(("__view__", "j6_deps"), build)
 
 
 def j6_service_deps(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -489,27 +489,33 @@ def test_streaming_transitions_carry_state_across_batches(spark, tmp_path):
 
 
 # --- streaming minhash intake dedup -------------------------------------------
-def test_minhash_band_structs_null_key_for_short_docs(spark):
+def test_band_key_null_for_short_docs(spark):
     """A doc with < 3 words has zero shingles ⇒ NULL band keys (the
     NULL-propagating concat), so intake banding EXCLUDES it — two
     unrelated short docs must not collide under md5('') (the review
     finding: concat_ws skipped the NULL components silently)."""
-    from codegraph_spark.queries.dedup import minhash_band_structs
+    from codegraph_spark.queries.dedup import (
+        band_structs_from_mins,
+        minhash_mins_column,
+    )
 
     df = spark.createDataFrame(
-        [(1, "hi"), (2, "two words"), (3, "three whole words here")],
+        [(1, "hi"), (2, "two words"), (3, "three whole words here"),
+         (4, ""), (5, "exactly three words")],
         "doc_id long, text string",
-    ).select("doc_id", minhash_band_structs().alias("bks"))
+    ).select("doc_id", band_structs_from_mins(minhash_mins_column()).alias("bks"))
     rows = {r["doc_id"]: r["bks"] for r in df.collect()}
     assert all(bk["key"] is None for bk in rows[1])
     assert all(bk["key"] is None for bk in rows[2])
+    assert all(bk["key"] is None for bk in rows[4])
     assert all(bk["key"] is not None for bk in rows[3])
+    assert all(bk["key"] is not None for bk in rows[5])  # one shingle
 def test_streaming_bucket_prior_carries_index_across_batches(spark, tmp_path):
     """A batch-2 document identical to a batch-1 document must hit all
     4 band buckets the batch-1 doc opened (the carried LSH index)."""
     import os
 
-    from codegraph_spark.queries.dedup import minhash_band_structs
+    from codegraph_spark.queries.streaming import _banded_docs
     from codegraph_spark.streaming.incremental import streaming_bucket_prior
 
     src = str(tmp_path / "docs")
@@ -517,11 +523,13 @@ def test_streaming_bucket_prior_carries_index_across_batches(spark, tmp_path):
     schema = "doc_id long, text string"
     same = "the quick brown fox jumps over the lazy dog again and again"
     spark.createDataFrame(
-        [(1, same), (2, "a completely different document about spark shuffles")],
+        [(1, same), (2, "a completely different document about spark shuffles"),
+         (5, "hi there")],
         schema,
     ).coalesce(1).write.parquet(os.path.join(src, "b1.parquet"))
     spark.createDataFrame(
-        [(3, same), (4, "yet another unrelated text with enough words to shingle")],
+        [(3, same), (4, "yet another unrelated text with enough words to shingle"),
+         (6, "exactly three words")],
         schema,
     ).coalesce(1).write.parquet(os.path.join(src, "b2.parquet"))
 
@@ -530,12 +538,7 @@ def test_streaming_bucket_prior_carries_index_across_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src + "/*.parquet")
     )
-    banded = (
-        stream.select("doc_id", minhash_band_structs().alias("bks"))
-        .filter(F.size("bks") > 0)
-        .select("doc_id", F.explode("bks").alias("bk"))
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    )
+    banded = _banded_docs(stream, "doc_id").filter(F.col("key").isNotNull())
     from codegraph_spark.streaming.incremental import run_available_now
 
     rows = run_available_now(
@@ -548,6 +551,8 @@ def test_streaming_bucket_prior_carries_index_across_batches(spark, tmp_path):
     assert all(p == -1 for p in by_doc[1])
     assert all(p == -1 for p in by_doc[2])
     assert all(p == -1 for p in by_doc[4])
+    assert 5 not in by_doc  # zero shingles: no band, no bucket
+    assert len(by_doc[6]) == 4 and all(p == -1 for p in by_doc[6])
 
 
 # --- hard negatives ----------------------------------------------------------

@@ -3,7 +3,7 @@
 1. personalized_pagerank agrees with an independent pure-Python
    walk-with-restart on arbitrary small digraphs + seed sets (dangling
    nodes, unreachable components, seeds outside the node set).
-2. The ROW-LOCAL MinHash banding (dedup.minhash_band_structs — what
+2. The ROW-LOCAL MinHash banding (streaming._banded_docs — what
    the streaming intake dedup applies statelessly) produces EXACTLY
    the band keys of the batch pipeline (shingle explode → group-min
    signature → concat banding) on arbitrary texts: the streaming/batch
@@ -85,57 +85,40 @@ _texts = st.lists(_words, min_size=1, max_size=6)
 @given(texts=_texts)
 @SETTINGS
 def test_row_local_banding_equals_batch_banding(spark, texts):
-    from codegraph_spark.queries.dedup import (
-        _AB,
-        _BANDS,
-        _P,
-        _shingle_hash_spark,
-        _shingles_of,
-        minhash_band_structs,
-    )
+    import hashlib
 
+    from codegraph_spark.queries.dedup import _AB, _BANDS, _banded, _shingles_of, _sig_of
+    from codegraph_spark.queries.streaming import _banded_docs
+
+    # plus a zero-shingle doc and an exactly-3-word (one-shingle) doc
+    texts = [*texts, [], ["alpha", "beta", "gamma"]]
     docs = spark.createDataFrame(
         [(i, " ".join(ws)) for i, ws in enumerate(texts)],
         "doc_id long, text string",
     )
     # row-local path (what the streaming intake applies)
     local = {
-        (r["doc_id"], r["bk"]["band"]): r["bk"]["key"]
-        for r in docs.select("doc_id", F.explode(minhash_band_structs()).alias("bk"))
-        .collect()
+        (r["doc_id"], r["band"]): r["key"]
+        for r in _banded_docs(docs, "doc_id").collect()
     }
-    # batch path: explode → group-min signature → concat banding
-    sig = (
-        _shingles_of(docs)
-        .withColumn("h", _shingle_hash_spark())
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.lit(a) * F.col("h") + F.lit(b)) % _P).alias(f"mh{i}")
-                for i, (a, b) in enumerate(_AB)
-            ]
-        )
-    )
+    # batch path: explode → grouped signature → the same band key
+    sig = _sig_of(_shingles_of(docs))
+    batch = {
+        (r["doc_id"], r["band"]): r["key"]
+        for r in _banded(sig, "doc_id").collect()
+    }
+    # Python md5 reference for the band key of the batch signature
     rows_per_band = len(_AB) // _BANDS
-    batch = {}
+    ref = {}
     for r in sig.collect():
         for bidx in range(_BANDS):
-            members = [
-                str(r[f"mh{i}"])
-                for i in range(bidx * rows_per_band, (bidx + 1) * rows_per_band)
-            ]
-            import hashlib
-
-            batch[(r["doc_id"], bidx)] = hashlib.md5(
-                ":".join(members).encode()
+            members = r["mins"][bidx * rows_per_band:(bidx + 1) * rows_per_band]
+            ref[(r["doc_id"], bidx)] = hashlib.md5(
+                ":".join(str(m) for m in members).encode()
             ).hexdigest()
-    # docs with ≥1 shingle: keys must agree exactly; docs with zero
+    assert batch == ref
+    # docs with ≥1 shingle: keys agree exactly; docs with zero
     # shingles: row-local keys are NULL (batch has no signature row)
-    for (doc, band), key in local.items():
-        if (doc, band) in batch:
-            assert key == batch[(doc, band)]
-        else:
-            assert key is None
-    assert set(batch) <= set(k for k, v in local.items() if v is not None) | set(batch)
-    for k in batch:
-        assert local[k] == batch[k]
+    assert {k: v for k, v in local.items() if v is not None} == ref
+    assert len(local) == len(texts) * _BANDS
+    assert (len(texts) - 1, 0) in ref and (len(texts) - 2, 0) not in ref

@@ -37,7 +37,7 @@ def test_strict_bucket_prior_raises_on_out_of_order_batch(spark, tmp_path):
     """The documented failure mode, driven: batch 2 delivers a doc_id
     BELOW batch 1's — the strict operator must fail loudly (it used to
     mask the violation as prior=-1)."""
-    from codegraph_spark.queries.dedup import minhash_band_structs
+    from codegraph_spark.queries.streaming import _banded_docs
     from codegraph_spark.streaming.incremental import (
         run_available_now,
         streaming_bucket_prior,
@@ -48,7 +48,8 @@ def test_strict_bucket_prior_raises_on_out_of_order_batch(spark, tmp_path):
         spark,
         tmp_path,
         "ooo_docs",
-        [[(10, same)], [(3, same)]],  # 3 arrives AFTER 10 — same buckets
+        # 3 arrives AFTER 10 — same buckets; 11 has no shingle, 12 one
+        [[(10, same), (11, "hi"), (12, "exactly three words")], [(3, same)]],
         "doc_id long, text string",
     )
     stream = (
@@ -56,12 +57,7 @@ def test_strict_bucket_prior_raises_on_out_of_order_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src + "/*.parquet")
     )
-    banded = (
-        stream.select("doc_id", minhash_band_structs().alias("bks"))
-        .filter(F.size("bks") > 0)
-        .select("doc_id", F.explode("bks").alias("bk"))
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    )
+    banded = _banded_docs(stream, "doc_id").filter(F.col("key").isNotNull())
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     with pytest.raises(StreamingQueryException, match="out-of-order"):
@@ -103,7 +99,7 @@ def test_unordered_bucket_prior_matches_strict_on_reordered_input(spark, tmp_pat
     """The CRDT-min operator under an adversarial interleave (late
     batch carries the global min) must produce the same drain verdicts
     the strict operator produces on the SORTED stream."""
-    from codegraph_spark.queries.dedup import minhash_band_structs
+    from codegraph_spark.queries.streaming import _banded_docs
     from codegraph_spark.streaming.incremental import (
         run_available_now,
         streaming_bucket_prior,
@@ -112,18 +108,12 @@ def test_unordered_bucket_prior_matches_strict_on_reordered_input(spark, tmp_pat
 
     same = "the quick brown fox jumps over the lazy dog again and again"
     other = "a completely different document about spark shuffle behavior"
-    rows = [(10, same), (3, same), (7, other), (1, same), (5, other)]
+    rows = [(10, same), (3, same), (7, other), (1, same), (5, other),
+            (2, "hi"), (8, "exactly three words")]
     schema = "doc_id long, text string"
 
     def banded_of(stream):
-        return (
-            stream.select("doc_id", minhash_band_structs().alias("bks"))
-            .filter(F.size("bks") > 0)
-            .select("doc_id", F.explode("bks").alias("bk"))
-            .select(
-                "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-            )
-        )
+        return _banded_docs(stream, "doc_id").filter(F.col("key").isNotNull())
 
     # strict path, in-order delivery (sorted by doc_id, one file per doc)
     src_in = _write_parts(
@@ -187,6 +177,7 @@ def test_unordered_bucket_prior_matches_strict_on_reordered_input(spark, tmp_pat
     }
     assert strict_verdicts == ooo_verdicts
     assert ooo_verdicts[3] == 1 and ooo_verdicts[10] == 1  # late min attributed
+    assert 2 not in ooo_verdicts and ooo_verdicts[8] == -1
 
 
 def test_stream_dedup_minhash_ooo_matches_batch_oracle(spark):
@@ -218,7 +209,7 @@ def test_in_order_multi_batch_still_passes_strict_ops(spark, tmp_path):
     """The enforcement must NOT fire on the legitimate path: in-order
     multi-batch delivery through the strict operator still works (the
     r6 carry-state behavior, now with the (mn, mx) state)."""
-    from codegraph_spark.queries.dedup import minhash_band_structs
+    from codegraph_spark.queries.streaming import _banded_docs
     from codegraph_spark.streaming.incremental import (
         run_available_now,
         streaming_bucket_prior,
@@ -229,7 +220,7 @@ def test_in_order_multi_batch_still_passes_strict_ops(spark, tmp_path):
         spark,
         tmp_path,
         "inorder",
-        [[(1, same)], [(3, same)]],
+        [[(1, same), (2, "hi")], [(3, same), (4, "exactly three words")]],
         "doc_id long, text string",
     )
     stream = (
@@ -237,12 +228,7 @@ def test_in_order_multi_batch_still_passes_strict_ops(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src + "/*.parquet")
     )
-    banded = (
-        stream.select("doc_id", minhash_band_structs().alias("bks"))
-        .filter(F.size("bks") > 0)
-        .select("doc_id", F.explode("bks").alias("bk"))
-        .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    )
+    banded = _banded_docs(stream, "doc_id").filter(F.col("key").isNotNull())
     rows = run_available_now(
         streaming_bucket_prior(banded), output_mode="update"
     ).collect()
@@ -251,6 +237,7 @@ def test_in_order_multi_batch_still_passes_strict_ops(spark, tmp_path):
         by_doc.setdefault(r["doc_id"], []).append(r["prior"])
     assert sorted(by_doc[3]) == [1, 1, 1, 1]
     assert all(p == -1 for p in by_doc[1])
+    assert 2 not in by_doc and by_doc[4] == [-1] * 4
 
 
 def test_buffered_transitions_equal_sorted_pairing_under_bounded_disorder(
@@ -334,16 +321,14 @@ def test_buffered_transitions_flush_rows_never_counted(spark, tmp_path):
     assert got == {("A", "B"): 1}  # no *->__flush__ pair, user 2 silent
 
 
-def test_single_pass_signature_equals_per_permutation_form(spark):
-    """minhash_mins_column (one aggregate pass, md5 once per shingle)
-    must produce band keys bit-identical to minhash_band_structs (16
-    separate array_min trees) — the r7 hot-path rewrite is a physical
-    change only."""
-    from codegraph_spark.queries.dedup import (
-        band_structs_from_mins,
-        minhash_band_structs,
-        minhash_mins_column,
-    )
+def test_row_local_bands_equal_grouped_bands(spark):
+    """The row-local signature (minhash_mins_column: one aggregate
+    pass, md5 once per shingle) and the grouped one (_sig_of: one min
+    aggregate per permutation over exploded shingles) must band every
+    doc identically — the streaming and batch dedup answers agree only
+    while both compute the same sketch."""
+    from codegraph_spark.queries.dedup import _banded, _shingles_of, _sig_of
+    from codegraph_spark.queries.streaming import _banded_docs
 
     docs = spark.createDataFrame(
         [
@@ -351,21 +336,19 @@ def test_single_pass_signature_equals_per_permutation_form(spark):
             (2, "a completely different document about spark shuffle behavior"),
             (3, "short"),  # zero shingles -> NULL keys on every band
             (4, "the quick brown fox jumps over the lazy dog again and again"),
+            (5, "exactly three words"),  # one shingle
         ],
         "doc_id long, text string",
     )
-    old = {
-        (r["doc_id"], r["bk"]["band"]): r["bk"]["key"]
-        for r in docs.select(
-            "doc_id", F.explode(minhash_band_structs()).alias("bk")
-        ).collect()
+    row_local = {
+        (r["doc_id"], r["band"]): r["key"]
+        for r in _banded_docs(docs, "doc_id").collect()
     }
-    new = {
-        (r["doc_id"], r["bk"]["band"]): r["bk"]["key"]
-        for r in docs.select(
-            "doc_id", F.explode(band_structs_from_mins(minhash_mins_column())).alias("bk")
-        ).collect()
+    grouped = {
+        (r["doc_id"], r["band"]): r["key"]
+        for r in _banded(_sig_of(_shingles_of(docs)), "doc_id").collect()
     }
-    assert old == new
-    assert all(v is None for (d, _), v in old.items() if d == 3)
-    assert old[(1, 0)] == old[(4, 0)]  # identical docs, identical keys
+    assert {k: v for k, v in row_local.items() if v is not None} == grouped
+    assert all(v is None for (d, _), v in row_local.items() if d == 3)
+    assert {d for d, _ in grouped} == {1, 2, 4, 5}
+    assert grouped[(1, 0)] == grouped[(4, 0)]  # identical docs, identical keys
